@@ -105,7 +105,7 @@ def main() -> None:
         "## Workloads",
         "",
         "1. **crawl** — full frontier pipeline (canonicalize -> batch dedup",
-        "   -> bloom probe with in-kernel exact URL-seen confirm ->",
+        "   -> exact URL-seen anti-join ->",
         "   robots broadcast join ->",
         "   per-host politeness rank -> broadcast fetch join over the",
         f"   {sample['explode_factor']}x-amplified parquet corpus ->",

@@ -175,7 +175,12 @@ def filter_not_seen(
     ``n_buckets`` must be a power of two: the JVM side buckets with signed
     ``pmod`` and the numpy probe with uint64 wrap-around modulo — they agree
     exactly when n_buckets divides 2^64.
+
+    ``confirm``: how filter positives get their exact check; only "join"
+    (the anti-join above) exists.
     """
+    if confirm != "join":
+        raise ValueError(f"unknown confirm {confirm!r}; only 'join' exists")
     assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of 2"
     keys = key_cols or [hash_col]
     if blooms is None:
@@ -194,7 +199,7 @@ def filter_not_seen(
 
     return cogroup_filter_not_seen(
         candidates, url_seen, blooms, _bloom_probe, hash_col, keys,
-        n_buckets, bucket_transform, return_flagged, confirm,
+        n_buckets, bucket_transform, return_flagged,
     )
 
 
@@ -208,101 +213,32 @@ def cogroup_filter_not_seen(
     n_buckets: int,
     bucket_transform=None,
     return_flagged: bool = False,
-    confirm: str = "join",
 ):
     """Shared cogrouped-probe skeleton for any per-bucket membership filter
     (Bloom, cuckoo, ...): candidates shuffle once on their hash bucket and
     meet the bucket's filter row(s); ``probe_rows_fn(table_pdf, hashes)``
     returns the maybe-seen mask; a missing bucket row means no seen keys.
 
-    ``confirm`` selects how filter positives get their exact check:
-
-    - ``"join"`` (default): the probed frame splits into fresh (filter
-      negative — definitely new) and maybe rows; maybe rows are confirmed
-      by a left-anti join against ``url_seen``. The two-consumer fan-out
-      is pinned by an eager scratch-parquet round trip (its own job;
-      callers read the flagged count off parquet footers for free).
-    - ``"inline"``: the bucket's ``url_seen`` KEYS ride the candidate side
-      of the same cogroup (same url_hash -> same bucket, so they are
-      colocated by the one shuffle that already happens), and the kernel
-      resolves filter positives against them in-place. Returns ONE frame
-      (candidate columns + ``__seen`` boolean) with a single consumer —
-      no fan-out to pin, no separate anti-join stage barriers, no extra
-      job. The caller filters ``~__seen`` (and can hang an Observation
-      between kernel and filter for an exact post-dedup candidate count).
-      Scale trade (explicit): the seen keys transit the shuffle + Arrow
-      every call — the same O(|url_seen|)-per-round the anti-join's
-      shuffle paid, now with zero extra stages; bucket key sets live in
-      one pandas frame, so ``n_buckets`` must scale with the corpus
-      (10^10 keys / 2^14 buckets ~= 45 MB of keys per task).
+    The probed frame splits into fresh (filter negative — definitely new)
+    and maybe rows; only the maybe rows are confirmed by a left-anti join
+    against ``url_seen``. The two-consumer fan-out is pinned by an eager
+    scratch-parquet round trip (its own job; callers read the flagged
+    count off parquet footers for free). A caller that wants every
+    candidate confirmed exactly needs no filter at all: that is the plain
+    anti-join of :func:`filter_not_seen` with ``blooms=None``.
     """
     from pyspark.sql.types import BooleanType, StructField, StructType
 
     from logcrawler_spark.utils import materialize
 
     out_cols = list(candidates.columns)
-    if confirm == "inline":
-        flag_name = "__seen"
-    else:
-        flag_name = "__maybe"
     # a FRESH StructType — StructType.add mutates in place and
     # DataFrame.schema is cached, so the caller's frame would grow a
     # phantom flag column (ADVICE r02)
     flagged_schema = StructType(
         list(candidates.schema.fields)
-        + [StructField(flag_name, BooleanType())]
+        + [StructField("__maybe", BooleanType())]
     )
-
-    if confirm == "inline":
-        # union the seen KEYS into the candidate side: key rows carry nulls
-        # for every non-key candidate column and __kind='s'
-        sel = [
-            (
-                F.col(f.name)
-                if f.name in keys
-                else F.lit(None).cast(f.dataType).alias(f.name)
-            )
-            for f in candidates.schema.fields
-        ]
-        cand_u = candidates.withColumn("__kind", F.lit("c")).unionByName(
-            url_seen.select(*sel).withColumn("__kind", F.lit("s"))
-        )
-
-        def _probe_inline(
-            cand_pdf: pd.DataFrame, tbl_pdf: pd.DataFrame
-        ) -> pd.DataFrame:
-            is_key = cand_pdf["__kind"].to_numpy() == "s"
-            cands = cand_pdf[~is_key]
-            if bucket_transform is not None:
-                cands = bucket_transform(cands)
-            out = cands[out_cols].copy()
-            if tbl_pdf.empty or out.empty:
-                # no filter row -> bucket has no seen keys (invariant:
-                # filter covers url_seen, so no key rows either way)
-                out[flag_name] = False
-                return out
-            hs = cands[hash_col].to_numpy().astype(np.uint64)
-            maybe = probe_rows_fn(tbl_pdf, hs)
-            seen_keys = cand_pdf[is_key]
-            if seen_keys.empty:
-                out[flag_name] = False
-                return out
-            # exact confirm of filter positives against the bucket's key
-            # set — vectorized two-column membership via an index merge
-            probe_idx = pd.MultiIndex.from_frame(cands[keys])
-            seen_idx = pd.MultiIndex.from_frame(seen_keys[keys])
-            out[flag_name] = maybe & probe_idx.isin(seen_idx)
-            return out
-
-        return (
-            cand_u.withColumn(
-                "__bucket",
-                F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int"),
-            )
-            .groupBy("__bucket")
-            .cogroup(tables.groupBy("bucket"))
-            .applyInPandas(_probe_inline, schema=flagged_schema)
-        )
 
     def _probe(cand_pdf: pd.DataFrame, tbl_pdf: pd.DataFrame) -> pd.DataFrame:
         if bucket_transform is not None:

@@ -394,11 +394,13 @@ def filter_not_seen_cuckoo(
     probe, exact confirm of positives), plus deletion support upstream."""
     from logcrawler_spark.plans.bloom import cogroup_filter_not_seen
 
+    if confirm != "join":
+        raise ValueError(f"unknown confirm {confirm!r}; only 'join' exists")
     assert n_buckets & (n_buckets - 1) == 0
     keys = key_cols or [hash_col]
     return cogroup_filter_not_seen(
         candidates, url_seen, cuckoos, cuckoo_probe_rows, hash_col, keys,
-        n_buckets, bucket_transform, return_flagged, confirm,
+        n_buckets, bucket_transform, return_flagged,
     )
 
 

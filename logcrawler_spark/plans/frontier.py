@@ -318,10 +318,11 @@ def politeness_rank(
 
 
 #: auto probe_confirm stays "inline" while |url_seen| <= FACTOR * |cands|;
-#: past that, bloom negatives stop shipping the bucket key sets through
-#: the probe shuffle + Arrow and the exact confirm becomes a selective
-#: anti-join ("join" mode). The crossover is coarse on purpose: both modes
-#: are oracle-exact, the factor only picks which cost shape to pay.
+#: past that, the exact anti-join of every candidate against the whole
+#: url_seen gives way to a filter probe whose negatives skip the join, and
+#: the exact confirm becomes a selective anti-join of the positives ("join"
+#: mode). The crossover is coarse on purpose: both modes are oracle-exact,
+#: the factor only picks which cost shape to pay.
 _PROBE_SWITCH_FACTOR = 4
 
 
@@ -335,9 +336,9 @@ def bucket_count_policy(
     Power of two (the probe's signed pmod and the kernels' uint64 modulo
     must agree), floored at 8 for parallelism, stepped so a bucket holds
     <= ``target_keys_per_bucket`` keys after pow2 rounding: at 10^10 keys
-    the default yields 2^14 buckets ≈ 610k keys/bucket — the
-    inline-confirm sizing note — and the filter, the url_seen files, and
-    the probe shuffle all share it."""
+    the default yields 2^14 buckets ≈ 610k keys/bucket, so each probe
+    task holds one bounded bucket's filter row — and the filter, the
+    url_seen files, and the probe shuffle all share it."""
     need = max(1, -(-n_seen // target_keys_per_bucket))
     n = 1 << (need - 1).bit_length()
     return max(8, n)
@@ -587,14 +588,19 @@ def crawl_round(
 
     Scale-adaptive knobs (VERDICT r03 item 1):
 
-    - ``probe_confirm="auto"`` picks the confirm shape per round from the
-      tracked counts: "inline" while |url_seen| <=
+    - ``probe_confirm`` selects the URL-seen confirm shape. "inline" runs
+      the JVM window dedup (:func:`dedup_batch`) and one left-anti join
+      of every deduped candidate against the effective url_seen — no
+      Python boundary and no job of its own; the membership filter is
+      maintained but not probed. "join" probes the filter in a cogrouped
+      pandas kernel (with the LWW dedup riding its shuffle), pins the
+      result, and anti-joins only the filter positives. "auto" picks per
+      round from the tracked counts: "inline" while |url_seen| <=
       ``_PROBE_SWITCH_FACTOR`` x |pending candidates| (a growing crawl's
-      steady state — zero extra jobs), else "join" (a mature frontier,
-      where inline would ship the whole key set through the probe shuffle
-      + Arrow every round). Both modes are oracle-exact; the switch only
-      changes cost shape. The counts are parquet-footer metadata off the
-      previous round's materialized tables.
+      steady state), else "join" (a mature frontier, where filter
+      negatives skip the exact join). All modes are oracle-exact; the
+      switch only changes cost shape. The counts are parquet-footer
+      metadata off the previous round's materialized tables.
     - ``bloom_buckets=None`` derives the bucket count from |url_seen| via
       :func:`bucket_count_policy` (shared with the catalog's url_seen
       storage bucketing in ``_commit_round``). When the policy steps up,
@@ -668,14 +674,6 @@ def crawl_round(
     )
 
     if use_bloom:
-        # keyed candidates flow straight into the bloom-probe cogroup; its
-        # cached output is the ONE evaluation of the canonicalization
-        # regexes for every downstream stage. The within-batch LWW dedup
-        # runs INSIDE the probe kernel: same canonical -> same url_hash ->
-        # same bucket, so it rides the probe's shuffle and the dedicated
-        # dedup window shuffle is gone (VERDICT r01 task 9). Round 1 probes
-        # an EMPTY bloom table (every row definitely-new) so the fused path
-        # applies from the start.
         standing = state.blooms
         if standing is not None and n_buckets != want_buckets:
             # bucket-count policy stepped up: the standing filter's layout
@@ -718,80 +716,39 @@ def crawl_round(
                 " k int"
             )
             filter_in = keyed.sparkSession.createDataFrame([], schema)
+    probe_join = use_bloom and mode == "join"
+    if probe_join:
+        # "join": keyed candidates flow straight into the filter-probe
+        # cogroup, with the within-batch LWW dedup riding its shuffle
+        # (same canonical -> same url_hash -> same bucket). Filter
+        # negatives BYPASS the exact anti-join, so url_seen is only
+        # scanned by the (selective) confirm join of the positives — the
+        # right choice once |url_seen| >> |round candidates|. Costs one
+        # extra materializing job per round (the probe pin).
         probe = (
             filter_not_seen_cuckoo
             if filter_kind == "cuckoo"
             else filter_not_seen
         )
-        if mode == "inline" and state.round_no == 0:
-            # ROUND-1 fast path (r6): a fresh crawl's URL-seen set is
-            # empty by construction (every CrawlState built at round 0
-            # starts from the empty frame; resume always lands at
-            # round_no >= 1), so the probe cogroup would ship every
-            # candidate through the Python boundary just to stamp
-            # __seen=False. The only real work in that kernel is the
-            # within-batch LWW dedup — run its JVM window twin
-            # (:func:`dedup_batch`, the documented identical-order-keys
-            # pair of ``_lww_dedup_pandas``) and skip the probe shuffle +
-            # Arrow round-trip entirely. Survivors and counts are
-            # identical (pinned by the frontier-oracle schedule gate);
-            # measured ~0.65s/run of Python-boundary cost at the sf1.0
-            # bench (guide §4: eliminate the boundary when a JVM
-            # formulation exists).
-            obs_probe = Observation(f"probe_{rnd}")
-            unseen = dedup_batch(keyed).observe(
-                obs_probe, F.count(F.lit(1)).alias("n_cand")
-            )
-        elif mode == "inline":
-            # the exact confirm of filter positives happens INSIDE the
-            # probe kernel against the bucket's url_seen keys (same
-            # url_hash -> same bucket, colocated by the probe's one
-            # shuffle). The probe therefore has a single downstream
-            # consumer — no fan-out to pin, no separate anti-join stage
-            # barriers, no probe job of its own: the whole candidate path
-            # (canonicalize -> dedup -> probe -> exact confirm -> robots
-            # -> politeness) is ONE materializing job per round (the sched
-            # write). n_cand rides as an Observation between the kernel
-            # and the seen-filter. Trade: the effective url_seen keys
-            # transit the probe shuffle + Arrow every round — the right
-            # default while candidates and url_seen are the same order of
-            # magnitude (a growing crawl's steady state).
-            flagged = probe(
-                keyed,
-                eff_seen,
-                filter_in,
-                hash_col="url_hash",
-                key_cols=["url_hash", "canonical_url"],
-                n_buckets=n_buckets,
-                bucket_transform=_lww_dedup_pandas,
-                confirm="inline",
-            )
-            obs_probe = Observation(f"probe_{rnd}")
-            unseen = (
-                flagged.observe(obs_probe, F.count(F.lit(1)).alias("n_cand"))
-                .filter(~F.col("__seen"))
-                .drop("__seen")
-            )
-        else:
-            # "join": bloom negatives BYPASS the exact anti-join entirely,
-            # so url_seen is only scanned by the (selective) confirm join —
-            # the right choice once |url_seen| >> |round candidates| (a
-            # mature 10^10-key frontier with bucketed storage, where the
-            # confirm join prunes by key bucket instead of shipping every
-            # seen key through Python). Costs one extra materializing job
-            # per round (the probe pin).
-            unseen, flagged = probe(
-                keyed,
-                eff_seen,
-                filter_in,
-                hash_col="url_hash",
-                key_cols=["url_hash", "canonical_url"],
-                n_buckets=n_buckets,
-                bucket_transform=_lww_dedup_pandas,
-                return_flagged=True,
-            )
-            n_cand = flagged.count()  # parquet-footer count: metadata only
+        unseen, flagged = probe(
+            keyed,
+            eff_seen,
+            filter_in,
+            hash_col="url_hash",
+            key_cols=["url_hash", "canonical_url"],
+            n_buckets=n_buckets,
+            bucket_transform=_lww_dedup_pandas,
+            return_flagged=True,
+        )
+        n_cand = flagged.count()  # parquet-footer count: metadata only
     else:
+        # "inline" (and the filterless path): JVM window dedup, then one
+        # exact left-anti join against the effective url_seen. No Python
+        # boundary and no job of its own — the whole candidate path
+        # (canonicalize -> dedup -> anti-join -> robots -> politeness) is
+        # ONE materializing job per round (the sched write), n_cand rides
+        # as an Observation, and against a fresh crawl's empty seen frame
+        # Catalyst drops the join altogether.
         obs_dedup = Observation(f"dedup_{rnd}")
         cand = dedup_batch(keyed).observe(
             obs_dedup, F.count(F.lit(1)).alias("n_cand")
@@ -824,11 +781,7 @@ def crawl_round(
     # observations resolve after the first action over the candidate plan
     # (the sched materialize above, or the probe pin in "join" mode)
     n_raw = int(obs_cand.get["n_raw"])
-    if use_bloom:
-        if mode == "inline":
-            n_cand = int(obs_probe.get["n_cand"])
-        # "join" mode counted n_cand off the probe parquet footers already
-    else:
+    if not probe_join:  # "join" counted n_cand off the probe's footers
         n_cand = int(obs_dedup.get["n_cand"])
 
     # fetch + extract + expand in ONE pass over the corpus — plan built by
@@ -1148,9 +1101,13 @@ def run_crawl(
     # the robots broadcast side is loop-invariant: aggregate + pin it ONCE
     # instead of re-aggregating the rule table every round
     robots_ph = _materialize(robots_per_host(robots))
+    # statically empty: the false filter plans as an empty local relation,
+    # so the optimizer drops round 1's URL-seen anti-join and prunes this
+    # branch from every later url_seen union (a bare createDataFrame([]) is
+    # an RDD scan of unknown size, which also blocks broadcasting the union)
     empty_seen = spark.createDataFrame(
         [], "url_hash long, canonical_url string, first_seen_round int"
-    )
+    ).where(F.lit(False))
     if priority_source not in ("inherit", "pagerank"):
         raise ValueError(f"unknown priority_source {priority_source!r}")
     pagerank = priority_source == "pagerank"

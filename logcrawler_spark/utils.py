@@ -24,10 +24,13 @@ def materialize(df: DataFrame) -> DataFrame:
     measured up to 30x slower at 32 threads (see plans/frontier.py).
     """
     global _MAT_DIR, _MAT_SEQ
+    import atexit
+    import shutil
     import tempfile
 
     if _MAT_DIR is None:
         _MAT_DIR = tempfile.mkdtemp(prefix="logcrawler-mat-")
+        atexit.register(shutil.rmtree, _MAT_DIR, ignore_errors=True)
     _MAT_SEQ += 1
     path = f"{_MAT_DIR}/m{_MAT_SEQ:05d}"
     df.write.mode("overwrite").parquet(path)
@@ -54,25 +57,28 @@ def ensure_min_partitions(
     only pays for itself when a single task would otherwise chew through
     many MB.  When set, the target partition count is derived from the
     on-disk bytes of the backing files (driver-side ``getsize``, no job) as
-    ``bytes // min_split_bytes``, capped at ``n`` — so tiny local inputs
-    skip the shuffle entirely while a 100-TB table still splits.  Inputs
-    not backed by local files fall back to the unconditional behavior.
+    ``ceil(bytes / min_split_bytes)``, capped at ``n`` — so tiny local
+    inputs skip the shuffle entirely while a 100-TB table still splits.
+    Inputs not all backed by local files (or not statable) fall back to
+    the unconditional behavior.
     """
     spark = df.sparkSession
     if n is None:
         n = spark.sparkContext.defaultParallelism
     if min_split_bytes is not None:
         import os as _os
+        from urllib.parse import unquote
 
-        try:
-            paths = [f for f in df.inputFiles() if f.startswith("file:")]
-            if paths:
+        files = df.inputFiles()
+        if files and all(f.startswith("file:") for f in files):
+            try:
                 total = sum(
-                    _os.path.getsize(p[len("file:"):]) for p in paths
+                    _os.path.getsize(unquote(f[len("file:"):]))
+                    for f in files
                 )
-                n = min(n, max(1, total // min_split_bytes))
-        except Exception:
-            pass  # size unknown -> keep the unconditional target
+                n = min(n, max(1, -(-total // min_split_bytes)))
+            except OSError:
+                pass  # size unknown -> keep the unconditional target
     if n <= 1:
         return df
     if df.rdd.getNumPartitions() >= n:

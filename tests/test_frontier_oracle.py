@@ -288,10 +288,10 @@ def test_fetch_permanent_failures_drop_pages_and_are_counted(spark):
 
 
 def test_probe_confirm_join_matches_inline(spark):
-    """The two exact-confirm strategies (in-kernel vs anti-join, both over
-    the same bloom prefilter) are plan-level alternatives with identical
-    semantics: same schedule (ranks + slots), same URL-seen set, same
-    candidate counts in metrics."""
+    """The two exact-confirm strategies (one anti-join of every candidate
+    vs a bloom probe whose positives alone are anti-joined) are plan-level
+    alternatives with identical semantics: same schedule (ranks + slots),
+    same URL-seen set, same candidate counts in metrics."""
     pages = generate_pages(spark, SF_SMOKE, n_hosts=N_HOSTS)
     seeds = generate_seeds(spark, SF_SMOKE, n_hosts=N_HOSTS)
     robots = generate_robots_rules(spark, n_hosts=N_HOSTS)
@@ -316,6 +316,44 @@ def test_probe_confirm_join_matches_inline(spark):
         return sched, seen, cand
 
     assert run("inline") == run("join")
+
+
+def test_warm_round0_state_never_reschedules_seen_keys(spark):
+    """A round-0 CrawlState whose url_seen already holds some seed keys
+    must not schedule those keys: round 1 confirms against url_seen like
+    every later round."""
+    from logcrawler_spark.functions.urls import canonicalize_url
+    from logcrawler_spark.plans.frontier import (
+        CrawlState,
+        crawl_round,
+        robots_per_host,
+    )
+
+    pages = generate_pages(spark, SF_SMOKE, n_hosts=N_HOSTS)
+    seeds = generate_seeds(spark, SF_SMOKE, n_hosts=N_HOSTS)
+    robots = robots_per_host(generate_robots_rules(spark, n_hosts=N_HOSTS))
+    pages_c = pages.withColumn(
+        "canonical_url", canonicalize_url(F.col("url"))
+    )
+    empty = spark.createDataFrame(
+        [], "url_hash long, canonical_url string, first_seen_round int"
+    )
+
+    def scheduled(seen):
+        st = crawl_round(
+            CrawlState(url_seen=seen, candidates=seeds), pages_c, robots,
+            BUDGET, probe_confirm="inline",
+        )
+        return st.schedule.select("url_hash", "canonical_url").collect()
+
+    cold = sorted(scheduled(empty), key=lambda r: r["canonical_url"])
+    pre = [(r["url_hash"], r["canonical_url"], 0) for r in cold[::2]]
+    assert pre
+    warm = {r["canonical_url"] for r in scheduled(
+        spark.createDataFrame(pre, empty.schema)
+    )}
+    assert warm
+    assert warm.isdisjoint(c for _, c, _ in pre)
 
 
 def test_windowed_politeness_spillover_matches_simulator(spark):

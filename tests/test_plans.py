@@ -4,9 +4,11 @@ placement — asserted on the physical plans so regressions fail loudly
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def _plan(df) -> str:
@@ -126,6 +128,48 @@ def test_bloom_probe_is_cogrouped_bucket_join(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_inline_confirm_round_plan_has_no_python_probe(spark, monkeypatch):
+    """An inline-confirm round past the first runs its URL-seen confirm in
+    the JVM: the schedule job of round 2 holds an exact anti-join and no
+    cogrouped pandas probe, nested-loop join or cartesian product. Round 1
+    confirms against the statically empty seen frame, so the optimizer
+    drops its anti-join."""
+    import logcrawler_spark.utils as U
+    from logcrawler_spark.plans.frontier import run_crawl
+    from logcrawler_spark.sources.pages import (
+        generate_pages,
+        generate_robots_rules,
+        generate_seeds,
+    )
+
+    scheds = []
+    orig = U.materialize
+
+    def spy(df):
+        if "slot_ms" in df.columns:
+            scheds.append(df)
+        return orig(df)
+
+    monkeypatch.setattr(U, "materialize", spy)
+    pages = generate_pages(spark, SF_SMOKE, 50)
+    seeds = generate_seeds(spark, SF_SMOKE, 50)
+    robots = generate_robots_rules(spark, 50)
+    run_crawl(
+        spark, pages, seeds, robots, rounds=2, budget=4,
+        probe_confirm="inline", fuse_fetch=True,
+    )
+    assert len(scheds) == 2
+    r1 = scheds[0]._jdf.queryExecution().executedPlan().toString()
+    assert "LeftAnti" not in r1
+    plan = _plan(scheds[1])
+    assert "LeftAnti" in plan
+    for node in (
+        "FlatMapCoGroupsInPandas", "BroadcastNestedLoopJoin",
+        "CartesianProduct",
+    ):
+        assert node not in plan, node
+
+
 def test_fetch_retry_stays_in_codegen(spark):
     """The S6 retry expressions are pure columns — the fetch filter must
     not introduce a Python UDF stage."""
@@ -152,7 +196,7 @@ def test_fetch_retry_stays_in_codegen(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_ensure_min_partitions_size_gate(spark):
+def test_ensure_min_partitions_size_gate(spark, tmp_path):
     """min_split_bytes gates the RR exchange by input bytes: a tiny local
     parquet (KBs) must NOT be repartitioned (the exchange costs more than
     the kernel it parallelizes — measured 0.723s vs 0.225s on
@@ -176,3 +220,19 @@ def test_ensure_min_partitions_size_gate(spark):
     # unsplittable file would be spread
     sized = ensure_min_partitions(d, min_split_bytes=1)
     assert sized.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+    # the split count is ceil(bytes / min_split_bytes): a file ~1.5x the
+    # gate spreads over 2 tasks, not 1 — also when its path holds a space
+    # (``inputFiles()`` returns it URI-quoted)
+    for name in ("plain", "with space"):
+        out = str(tmp_path / name)
+        spark.range(5000).coalesce(1).write.parquet(out)
+        size = sum(
+            os.path.getsize(os.path.join(out, f))
+            for f in os.listdir(out) if f.endswith(".parquet")
+        )
+        d = spark.read.parquet(out)
+        assert d.rdd.getNumPartitions() == 1
+        # an unsized input would fall back to the unconditional n=8
+        got = ensure_min_partitions(d, n=8, min_split_bytes=size * 2 // 3)
+        assert got.rdd.getNumPartitions() == 2, name
