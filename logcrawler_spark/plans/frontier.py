@@ -27,6 +27,7 @@ scale: the fetcher cluster; here the synthetic pages table).
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -382,6 +383,46 @@ class CrawlState:
     metrics_delta: DataFrame | None = None
 
 
+#: AQE rule that swaps a query stage which returned no rows, and every
+#: operator it empties, for an empty relation, dropping the Observations
+#: inside it
+_AQE_EMPTY_RULE = (
+    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+)
+_AQE_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+
+
+def _observations_kept(step):
+    """Run a crawl step ``step(state, ...)`` with :data:`_AQE_EMPTY_RULE`
+    excluded in the state's session, then restore the caller's setting.
+
+    A round whose candidates or confirm output come back empty (a drained
+    frontier, a linkless corpus) would otherwise lose the Observations
+    that carry its counts. Every job that resolves them runs inside such
+    a step, so the crawl is safe in any session while other plans keep
+    the session's rules. The conf is session-wide while the step runs:
+    a query run concurrently in the same session plans without the rule.
+    """
+
+    @functools.wraps(step)
+    def run(state: CrawlState, *args, **kwargs):
+        conf = state.candidates.sparkSession.conf
+        prev = conf.get(_AQE_EXCLUDED_RULES, None)
+        rules = [r.strip() for r in (prev or "").split(",") if r.strip()]
+        if _AQE_EMPTY_RULE in rules:
+            return step(state, *args, **kwargs)
+        conf.set(_AQE_EXCLUDED_RULES, ",".join(rules + [_AQE_EMPTY_RULE]))
+        try:
+            return step(state, *args, **kwargs)
+        finally:
+            if prev is None:
+                conf.unset(_AQE_EXCLUDED_RULES)
+            else:
+                conf.set(_AQE_EXCLUDED_RULES, prev)
+
+    return run
+
+
 def _materialize(df: DataFrame) -> DataFrame:
     """Cut lineage between rounds by spilling to scratch parquet.
 
@@ -554,6 +595,7 @@ def _fetch_extract_plan(
     return outlinks, obs, obs_att
 
 
+@_observations_kept
 def crawl_round(
     state: CrawlState,
     pages_c: DataFrame,
@@ -943,6 +985,7 @@ def crawl_round(
     )
 
 
+@_observations_kept
 def finalize_crawl(state: CrawlState) -> CrawlState:
     """Flush the LAST round's deferred fetch (fuse_fetch mode): one
     materializing job runs the pending fetch/extract/outlink plan, its
@@ -1140,10 +1183,11 @@ def run_crawl(
             _maybe_rebucket(catalog, state, prev_filter_buckets)
             _commit_round(spark, catalog, state, filter_kind)
         prev_filter_buckets = state.filter_buckets
-    return _finalize_with_catalog(catalog, state)
+    return _finalize_with_catalog(state, catalog)
 
 
-def _finalize_with_catalog(catalog: Catalog | None, state: CrawlState):
+@_observations_kept
+def _finalize_with_catalog(state: CrawlState, catalog: Catalog | None):
     """Flush the last round's deferred fetch and, with a catalog, bring the
     commit history to the eager-equivalent shape: real pending_candidates
     rows replace the fused marker, and the final round's just-resolved
@@ -1618,4 +1662,4 @@ def resume_crawl(
         _maybe_rebucket(catalog, state, prev_filter_buckets)
         _commit_round(spark, catalog, state, filter_kind)
         prev_filter_buckets = state.filter_buckets
-    return _finalize_with_catalog(catalog, state)
+    return _finalize_with_catalog(state, catalog)

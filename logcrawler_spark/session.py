@@ -65,15 +65,6 @@ def get_spark(
         .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # AQE swaps a query stage that returned no rows (and every join it
-        # empties) for an empty relation, dropping the Observations inside
-        # it: a crawl round with no candidates would then never report its
-        # counts. Keep empty stages in the plan: the operators above them
-        # then run on no rows instead of being skipped.
-        .config(
-            "spark.sql.adaptive.optimizer.excludedRules",
-            "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation",
-        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -787,3 +787,58 @@ def test_pagerank_priority_linkless_corpus_no_crash(spark):
         for r in state.schedule.collect()
     ]
     assert rows == [(1, "http://a.example.com/p1", 5.0)]
+
+
+@pytest.mark.parametrize("fuse_fetch", [False, True])
+def test_drained_frontier_crawl_in_default_aqe_session(spark, fuse_fetch):
+    """A crawl whose later rounds confirm every candidate as already seen
+    still resolves its round counts in a session with AQE's default rules
+    (a crawl job's own session), where an empty query stage is swapped for
+    an empty relation along with the Observations inside it. Broadcasts
+    are off so the URL-seen anti-join shuffles, as it does at scale. The
+    session's conf is left as the crawl found it."""
+    from datetime import datetime
+
+    key = "spark.sql.adaptive.optimizer.excludedRules"
+    bcast = "spark.sql.autoBroadcastJoinThreshold"
+    saved = {k: spark.conf.get(k, None) for k in (key, bcast)}
+    spark.conf.unset(key)
+    spark.conf.set(bcast, "-1")
+    try:
+        html = '<p><a href="/p{}">next</a></p>'
+        pages = spark.createDataFrame(
+            [
+                (f"http://a.example.com/p{i}", datetime(2024, 1, 1),
+                 html.format(3 - i).encode())
+                for i in (1, 2)
+            ],
+            "url string, warc_ts timestamp, html binary",
+        )
+        seeds = spark.createDataFrame(
+            [("http://a.example.com/p1", 5.0)],
+            "url string, priority double",
+        )
+        robots = spark.createDataFrame(
+            [], "host string, path_prefix string, allow boolean,"
+            " crawl_delay_ms long",
+        )
+        state = run_crawl(
+            spark, pages, seeds, robots, rounds=4, budget=5,
+            fuse_fetch=fuse_fetch,
+        )
+        assert spark.conf.get(key, None) is None
+        assert sorted(
+            (r["round"], r["canonical_url"])
+            for r in state.schedule.collect()
+        ) == [(1, "http://a.example.com/p1"), (2, "http://a.example.com/p2")]
+        assert sorted(
+            (r["round"], r["urls_candidates_total"],
+             r["pages_fetched_total"])
+            for r in state.metrics.collect()
+        ) == [(1, 1, 1), (2, 1, 1)]
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
