@@ -9,7 +9,7 @@ full plan runs without driver materialization).
 
 Env knobs:
   SPARK_GRAFT_SF_DIR   testdata dir (default /root/testdata/sf0.1)
-  SPARK_GRAFT_CPUS     local parallelism (default 32)
+  SPARK_GRAFT_CPUS     local parallelism (default: os.cpu_count())
   BENCH_EXPLODE        corpus amplification factor (default 64)
   BENCH_ROUNDS         crawl rounds (default 2)
   BENCH_BUDGET         per-host budget (default 64)
@@ -42,7 +42,7 @@ import time
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 8)
     explode = int(os.environ.get("BENCH_EXPLODE", "64"))
     html_pad = int(os.environ.get("BENCH_HTML_PAD", "32"))
     rounds = int(os.environ.get("BENCH_ROUNDS", "2"))

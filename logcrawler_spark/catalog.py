@@ -259,8 +259,8 @@ class Catalog:
         """Replace a TINY control table (a marker row, a handful of
         counters) with a driver-side pyarrow parquet write — no Spark job.
 
-        The per-round commit writes two such tables (``round_marker``,
-        ``fused_pending``); routing a 1-row literal through a full Spark
+        The crawl writes such tables (``round_marker``, ``fused_pending``,
+        ``crawl_config``); routing a 1-row literal through a full Spark
         write job cost ~0.3-0.4s of fixed job latency per table per round
         at the bench config (r6 durable-floor measurement). The resulting
         file is a plain parquet dir, read by ``read()`` exactly like a
@@ -272,6 +272,19 @@ class Catalog:
         if meta is not None:
             self._write_meta(table, {**meta, "compacted_snap": snap_name})
         self._commit(table, [(snap_name, None)])
+
+    def read_local(self, table: str) -> list[dict]:
+        """Rows of a TINY control table as dicts, read driver-side with
+        pyarrow — no Spark job (the read twin of :meth:`overwrite_local`).
+        """
+        import pyarrow.parquet as pq
+
+        dirs = self.current_dirs(table)
+        if not dirs:
+            raise FileNotFoundError(
+                f"table {table!r} has no committed snapshot"
+            )
+        return [row for d in dirs for row in pq.read_table(d).to_pylist()]
 
     def append_local(
         self, table: str, rows: list[tuple], schema: str, tag: int

@@ -28,17 +28,15 @@ scale: the fetcher cluster; here the synthetic pages table).
 from __future__ import annotations
 
 import functools
-from dataclasses import dataclass, field
+import json
+from dataclasses import asdict, dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from logcrawler_spark.catalog import Catalog
-from logcrawler_spark.extraction import (
-    extract_links,
-    extract_text_and_links,
-)
+from logcrawler_spark.extraction import extract_text_and_links
 from logcrawler_spark.functions.urls import (
     canonicalize_url,
     resolve_link,
@@ -345,6 +343,125 @@ def bucket_count_policy(
     return max(8, n)
 
 
+@dataclass(frozen=True)
+class CrawlConfig:
+    """Every crawl knob, declared once. :func:`run_crawl` commits it to the
+    catalog as the ``crawl_config`` table and :func:`resume_crawl` refuses
+    a config that differs from it, so a resumed crawl is the straight run.
+
+    ``budget`` is the per-host politeness budget of one fetch window.
+
+    ``use_bloom`` maintains a URL-seen membership filter; without it every
+    round confirms with the exact anti-join and metrics label it "exact".
+    ``filter_kind`` selects the filter: "bloom" (append-only, OR-mergeable)
+    or "cuckoo" (supports deletion). ``ttl_rounds`` enables recrawl: a URL
+    seen at round s becomes schedulable again at round s + ttl_rounds —
+    its key is DELETED from the cuckoo filter when it ages out (Bloom
+    cannot express this, so TTL requires cuckoo), and the exact confirm
+    runs against only the un-aged url_seen rows.
+
+    ``failure_rate_pct`` > 0 turns on the S6 transient-failure simulation:
+    each fetch attempt fails deterministically with that percent chance
+    (hash of url x attempt), retried up to ``max_fetch_attempts``; retry
+    and permanent-failure counts land in the metrics table.
+
+    ``windows_per_round`` / ``window_ms``: a round spans that many fetch
+    windows, each admitting ``budget`` URLs per host (see
+    :func:`politeness_rank`).
+
+    Scale-adaptive knobs (VERDICT r03 item 1):
+
+    - ``probe_confirm`` selects the URL-seen confirm shape. "inline" runs
+      the JVM window dedup (:func:`dedup_batch`) and one left-anti join
+      of every deduped candidate against the effective url_seen — no
+      Python boundary and no job of its own; the membership filter is
+      maintained but not probed. "join" probes the filter in a cogrouped
+      pandas kernel (with the LWW dedup riding its shuffle), pins the
+      result, and anti-joins only the filter positives. "auto" picks per
+      round from the tracked counts: "inline" while |url_seen| <=
+      ``_PROBE_SWITCH_FACTOR`` x |pending candidates| (a growing crawl's
+      steady state), else "join" (a mature frontier, where filter
+      negatives skip the exact join). All modes are oracle-exact; the
+      switch only changes cost shape. The counts are parquet-footer
+      metadata off the previous round's materialized tables.
+    - ``bloom_buckets=None`` derives the bucket count from |url_seen| via
+      :func:`bucket_count_policy` (with ``bucket_target_keys`` keys per
+      bucket, shared with the catalog's url_seen storage bucketing in
+      ``_commit_round``). When the policy steps up, the standing filter is
+      REBUILT from the exact key set at the new count — the re-bucket
+      path; the probe always uses exactly the count the standing table
+      was built with (``state.filter_buckets``).
+
+    ``fuse_fetch=True`` (VERDICT r03 item 4 — the job-overlap lever):
+    a round's fetch/extract/outlink pass is NOT materialized; the lazy
+    plan becomes the next round's candidate input, so round N's fetch
+    stages execute INSIDE round N+1's one sched job (lineage stays
+    bounded — the fused plan reads only the pages parquet and round N's
+    sched parquet). Per-round materializing jobs drop from 2 to 1, plus
+    one final flush (:func:`finalize_crawl`) for the last round's fetch.
+    Fetch metrics resolve one round late via the deferred Observation in
+    ``state.pending_fetch``. Composes with the auto scale knobs (r5: the
+    pending count uses the round's already-resolved raw-candidate count
+    as a one-round-stale proxy instead of counting the deferred plan) and
+    with per-round catalog commits (the commit persists the fetch's
+    bounded RECOMPUTE POINT — the sched parquet + a fused_pending marker
+    row — see :func:`_commit_round` and :func:`resume_crawl`).
+
+    ``priority_source``: "inherit" decays each child's priority from its
+    parent (priority * PRIORITY_DECAY); "pagerank" re-seeds every round's
+    candidate priorities from the PageRank of the CUMULATIVE outlink graph
+    crawled so far (``pagerank_iters`` power iterations, exact int64 — see
+    :func:`_pagerank_reprioritize`). Round 1 always uses the seed
+    priorities (no graph yet). Pagerank mode runs the rounds EAGER even
+    when ``fuse_fetch=True`` (:attr:`fused`): the per-round graph
+    computation is itself an action consuming the deferred plan, so
+    fusion's 1-job/round advantage is unreachable — eager keeps fetch
+    metrics same-round and the per-round commits resumable.
+
+    ``dedup_pages``: the input contract is one page per canonical_url;
+    ``True`` enforces it at ingest (LWW on (warc_ts, url) — see
+    :func:`dedup_pages_lww`) when the corpus may contain recrawls.
+    """
+
+    budget: int = 8
+    use_bloom: bool = True
+    bloom_buckets: int | None = 32
+    failure_rate_pct: int = 0
+    max_fetch_attempts: int = 3
+    filter_kind: str = "bloom"
+    ttl_rounds: int | None = None
+    windows_per_round: int = 1
+    window_ms: int = 60_000
+    probe_confirm: str = "inline"
+    bucket_target_keys: int = 1 << 20
+    fuse_fetch: bool = False
+    priority_source: str = "inherit"
+    pagerank_iters: int = 4
+    dedup_pages: bool = False
+
+    def __post_init__(self) -> None:
+        if self.filter_kind not in ("bloom", "cuckoo"):
+            raise ValueError(f"unknown filter_kind {self.filter_kind!r}")
+        if self.ttl_rounds is not None and self.filter_kind != "cuckoo":
+            raise ValueError(
+                "ttl_rounds requires filter_kind='cuckoo' (Bloom cannot"
+                " delete)"
+            )
+        if self.priority_source not in ("inherit", "pagerank"):
+            raise ValueError(
+                f"unknown priority_source {self.priority_source!r}"
+            )
+
+    @property
+    def pagerank(self) -> bool:
+        return self.priority_source == "pagerank"
+
+    @property
+    def fused(self) -> bool:
+        """Whether rounds defer their fetch (pagerank rounds run eager)."""
+        return self.fuse_fetch and not self.pagerank
+
+
 @dataclass
 class CrawlState:
     """Round-over-round state; every df is materialized (lineage cut).
@@ -438,74 +555,32 @@ def _materialize(df: DataFrame) -> DataFrame:
     return materialize(df)
 
 
-def _stage_clock():
-    """Per-action wall clock, enabled by CRAWL_STAGE_TIMES=1 (stderr).
-
-    The crawl's N->4N scaling is floor-bound at bench batch sizes, so
-    optimizing it requires knowing which ACTION the time sits in — this is
-    the measuring stick, not a profiler guess."""
-    import os
-    import sys
-    import time
-
-    if not os.environ.get("CRAWL_STAGE_TIMES"):
-        return lambda label: None
-    state = {"t": time.monotonic()}
-
-    def mark(label: str) -> None:
-        now = time.monotonic()
-        print(
-            f"[crawl-stage] {label}: {now - state['t']:.3f}s",
-            file=sys.stderr,
-        )
-        state["t"] = now
-
-    return mark
-
-
-def _round_metrics_df(
-    sched: DataFrame,
-    n_raw: int,
-    n_cand: int,
-    n_fetched: int,
-    bytes_extracted: int,
-    n_retries: int,
-    n_failures: int,
-    mode: str,
-    n_buckets: int,
-) -> DataFrame:
-    """One metrics row per (round, host) with the round totals as
-    literal columns — shared by the eager path and the fuse-mode deferred
-    resolution."""
+def _resolve_pending_metrics(pending: dict) -> DataFrame:
+    """Resolve a round's fetch observations into its metrics rows: one
+    row per (round, host) with the round totals as literal columns. The
+    job consuming the fetch has run by now — an eager round's outlink
+    write, or for a fused round the next round's job or the flush."""
+    got = pending["obs"].get
+    n_retries = n_failures = 0
+    if pending["obs_att"] is not None:
+        att = pending["obs_att"].get  # same job as obs — no extra pass
+        n_retries, n_failures = int(att["retries"]), int(att["failures"])
     return (
-        sched.groupBy("round", "host")
+        pending["sched"].groupBy("round", "host")
         .agg(
             F.count("*").alias("urls_scheduled"),
             F.max("host_rank").alias("max_host_rank"),
         )
-        .withColumn("urls_raw_total", F.lit(n_raw))
-        .withColumn("urls_candidates_total", F.lit(n_cand))
-        .withColumn("pages_fetched_total", F.lit(n_fetched))
-        .withColumn("bytes_extracted_total", F.lit(bytes_extracted))
+        .withColumn("urls_raw_total", F.lit(pending["n_raw"]))
+        .withColumn("urls_candidates_total", F.lit(pending["n_cand"]))
+        .withColumn("pages_fetched_total", F.lit(int(got["n_fetched"])))
+        .withColumn(
+            "bytes_extracted_total", F.lit(int(got["bytes_extracted"]))
+        )
         .withColumn("fetch_retries_total", F.lit(n_retries))
         .withColumn("fetch_failures_total", F.lit(n_failures))
-        .withColumn("probe_mode", F.lit(mode))
-        .withColumn("filter_buckets", F.lit(n_buckets))
-    )
-
-
-def _resolve_pending_metrics(pending: dict) -> DataFrame:
-    """Resolve a fused round's deferred fetch observation (the consuming
-    job has run by the time this is called) into its metrics rows."""
-    got = pending["obs"].get
-    n_retries = n_failures = 0
-    if pending["obs_att"] is not None:
-        att = pending["obs_att"].get
-        n_retries, n_failures = int(att["retries"]), int(att["failures"])
-    return _round_metrics_df(
-        pending["sched"], pending["n_raw"], pending["n_cand"],
-        int(got["n_fetched"]), int(got["bytes_extracted"]),
-        n_retries, n_failures, pending["mode"], pending["n_buckets"],
+        .withColumn("probe_mode", F.lit(pending["mode"]))
+        .withColumn("filter_buckets", F.lit(pending["n_buckets"]))
     )
 
 
@@ -513,9 +588,7 @@ def _fetch_extract_plan(
     pages_c: DataFrame,
     sched: DataFrame,
     rnd: int,
-    failure_rate_pct: int,
-    max_fetch_attempts: int,
-    keep_src: bool = False,
+    cfg: CrawlConfig,
 ):
     """Build the LAZY fetch + extract + outlink plan for one round's
     schedule; returns ``(outlinks, obs, obs_att)``. Pure plan construction
@@ -523,6 +596,8 @@ def _fetch_extract_plan(
     a fused catalog commit persists only the (already durable) sched rows,
     and this function is the documented recompute point: identical inputs
     (pages, sched, failure knobs) rebuild the identical deferred plan.
+    Pagerank crawls keep each outlink's (canonical) source so the caller
+    can accumulate the (src, dst) edges.
 
     Plan shape: the scheduled batch is bounded (hosts x budget), so IT
     broadcasts and the (huge) pages side streams map-side with no shuffle —
@@ -543,13 +618,13 @@ def _fetch_extract_plan(
     # rate; the first surviving attempt wins, bounded by max_fetch_attempts.
     # Pure column expressions — deterministic, re-runnable, no Python.
     obs_att = None
-    if failure_rate_pct > 0:
+    if cfg.failure_rate_pct > 0:
         ok_attempts = F.filter(
-            F.sequence(F.lit(1), F.lit(max_fetch_attempts)),
+            F.sequence(F.lit(1), F.lit(cfg.max_fetch_attempts)),
             lambda a: F.pmod(
                 F.xxhash64(F.col("canonical_url"), a), F.lit(100)
             )
-            >= failure_rate_pct,
+            >= cfg.failure_rate_pct,
         )
         obs_att = Observation(f"attempts_{rnd}")
         fetched = fetched.withColumn(
@@ -583,9 +658,7 @@ def _fetch_extract_plan(
         resolve_link(F.col("src_url"), F.col("href")).alias("url"),
         (F.col("__parent_priority") * PRIORITY_DECAY).alias("priority"),
     ]
-    if keep_src:
-        # link-graph mode: keep the (canonical) source so the caller can
-        # accumulate (src, dst) edges for PageRank priority seeding
+    if cfg.pagerank:
         out_cols.append(F.col("src_url"))
     outlinks = enriched.select(
         F.col("canonical_url").alias("src_url"),
@@ -600,69 +673,13 @@ def crawl_round(
     state: CrawlState,
     pages_c: DataFrame,
     robots: DataFrame,
-    budget: int,
-    use_bloom: bool = True,
-    bloom_buckets: int | None = 32,
-    failure_rate_pct: int = 0,
-    max_fetch_attempts: int = 3,
-    filter_kind: str = "bloom",
-    ttl_rounds: int | None = None,
-    windows_per_round: int = 1,
-    window_ms: int = 60_000,
-    probe_confirm: str = "inline",
-    bucket_target_keys: int = 1 << 20,
-    fuse_fetch: bool = False,
-    keep_src: bool = False,
+    *cfg_args,
+    **cfg_kwargs,
 ) -> CrawlState:
     """Advance one round. ``pages_c`` = pages with canonical_url attached.
 
-    ``failure_rate_pct`` > 0 turns on the S6 transient-failure simulation:
-    each fetch attempt fails deterministically with that percent chance
-    (hash of url x attempt), retried up to ``max_fetch_attempts``; retry
-    and permanent-failure counts land in the metrics table.
-
-    ``filter_kind`` selects the URL-seen prefilter: "bloom" (append-only,
-    OR-mergeable) or "cuckoo" (supports deletion). ``ttl_rounds`` enables
-    recrawl: a URL seen at round s becomes schedulable again at round
-    s + ttl_rounds — its key is DELETED from the cuckoo filter when it
-    ages out (Bloom cannot express this, so TTL requires cuckoo), and the
-    exact confirm runs against only the un-aged url_seen rows.
-
-    Scale-adaptive knobs (VERDICT r03 item 1):
-
-    - ``probe_confirm`` selects the URL-seen confirm shape. "inline" runs
-      the JVM window dedup (:func:`dedup_batch`) and one left-anti join
-      of every deduped candidate against the effective url_seen — no
-      Python boundary and no job of its own; the membership filter is
-      maintained but not probed. "join" probes the filter in a cogrouped
-      pandas kernel (with the LWW dedup riding its shuffle), pins the
-      result, and anti-joins only the filter positives. "auto" picks per
-      round from the tracked counts: "inline" while |url_seen| <=
-      ``_PROBE_SWITCH_FACTOR`` x |pending candidates| (a growing crawl's
-      steady state), else "join" (a mature frontier, where filter
-      negatives skip the exact join). All modes are oracle-exact; the
-      switch only changes cost shape. The counts are parquet-footer
-      metadata off the previous round's materialized tables.
-    - ``bloom_buckets=None`` derives the bucket count from |url_seen| via
-      :func:`bucket_count_policy` (shared with the catalog's url_seen
-      storage bucketing in ``_commit_round``). When the policy steps up,
-      the standing filter is REBUILT from the exact key set at the new
-      count — the re-bucket path; the probe always uses exactly the count
-      the standing table was built with (``state.filter_buckets``).
-
-    ``fuse_fetch=True`` (VERDICT r03 item 4 — the job-overlap lever):
-    this round's fetch/extract/outlink pass is NOT materialized; the lazy
-    plan becomes the next round's candidate input, so round N's fetch
-    stages execute INSIDE round N+1's one sched job (lineage stays
-    bounded — the fused plan reads only the pages parquet and round N's
-    sched parquet). Per-round materializing jobs drop from 2 to 1, plus
-    one final flush (:func:`finalize_crawl`) for the last round's fetch.
-    Fetch metrics resolve one round late via the deferred Observation in
-    ``state.pending_fetch``. Composes with the auto scale knobs (r5: the
-    pending count uses this round's already-resolved raw-candidate count
-    as a one-round-stale proxy instead of counting the deferred plan) and
-    with per-round catalog commits (the commit persists the fetch's
-    bounded recompute point — see :func:`_commit_round`).
+    The remaining arguments are the :class:`CrawlConfig` fields, in field
+    order or by name; the knobs are documented there.
     """
     from pyspark.sql import Observation
 
@@ -675,24 +692,17 @@ def crawl_round(
         insert_keys,
     )
 
-    if filter_kind not in ("bloom", "cuckoo"):
-        raise ValueError(f"unknown filter_kind {filter_kind!r}")
-    if ttl_rounds is not None and filter_kind != "cuckoo":
-        raise ValueError(
-            "ttl_rounds requires filter_kind='cuckoo' (Bloom cannot delete)"
-        )
-
+    cfg = CrawlConfig(*cfg_args, **cfg_kwargs)
     rnd = state.round_no + 1
-    mark = _stage_clock()
     # resolve this round's scale knobs BEFORE any plan is built
-    auto_scale = bloom_buckets is None or probe_confirm == "auto"
+    auto_scale = cfg.bloom_buckets is None or cfg.probe_confirm == "auto"
     want_buckets = (
-        bucket_count_policy(state.n_seen, bucket_target_keys)
-        if bloom_buckets is None
-        else bloom_buckets
+        bucket_count_policy(state.n_seen, cfg.bucket_target_keys)
+        if cfg.bloom_buckets is None
+        else cfg.bloom_buckets
     )
     n_buckets = state.filter_buckets or want_buckets
-    if probe_confirm == "auto":
+    if cfg.probe_confirm == "auto":
         pend = state.n_pending
         mode = (
             "inline"
@@ -701,21 +711,21 @@ def crawl_round(
             else "join"
         )
     else:
-        mode = probe_confirm
+        mode = cfg.probe_confirm
     # with TTL, rows seen at round <= rnd - ttl have aged out: they are
     # schedulable again, so the exact membership set excludes them (keys
     # re-seen later keep their newer row)
     eff_seen = state.url_seen
-    if ttl_rounds is not None:
+    if cfg.ttl_rounds is not None:
         eff_seen = state.url_seen.filter(
-            F.col("first_seen_round") > rnd - ttl_rounds
+            F.col("first_seen_round") > rnd - cfg.ttl_rounds
         )
     obs_cand = Observation(f"cand_{rnd}")
     keyed = canonicalize_candidates(
         state.candidates.observe(obs_cand, F.count(F.lit(1)).alias("n_raw"))
     )
 
-    if use_bloom:
+    if cfg.use_bloom:
         standing = state.blooms
         if standing is not None and n_buckets != want_buckets:
             # bucket-count policy stepped up: the standing filter's layout
@@ -725,25 +735,24 @@ def crawl_round(
             standing = None
             n_buckets = want_buckets
         if standing is None and state.round_no > 0:
-            # bootstrap BEFORE the probe (resume from a catalog lacking a
-            # filter table — or, for cuckoo, one whose committed filter was
-            # AHEAD of round_marker — or a use_bloom=False run resumed with
-            # True): the invariant is filter ⊇ effective url_seen — probing
-            # an empty table here would mark every seen URL definitely-new
-            # and re-schedule it. With TTL the rebuild must reproduce the
+            # bootstrap BEFORE the probe (a bucket-policy step-up above,
+            # or a cuckoo resume whose committed filter was AHEAD of
+            # round_marker): the invariant is filter ⊇ effective url_seen
+            # — probing an empty table here would mark every seen URL
+            # definitely-new and re-schedule it. With TTL the rebuild must reproduce the
             # START-of-round filter content {first_seen_round > rnd-ttl-1},
             # NOT eff_seen {> rnd-ttl}: this round's delete_keys targets the
             # keys aging out AT rnd, and a cuckoo delete of an absent key
             # can evict a colliding twin's fingerprint (false negative) —
             # so those keys must be IN the rebuilt table (ADVICE r02).
             boot_src = eff_seen
-            if ttl_rounds is not None:
+            if cfg.ttl_rounds is not None:
                 boot_src = state.url_seen.filter(
-                    F.col("first_seen_round") > rnd - ttl_rounds - 1
+                    F.col("first_seen_round") > rnd - cfg.ttl_rounds - 1
                 )
             build = (
                 build_cuckoo_table
-                if filter_kind == "cuckoo"
+                if cfg.filter_kind == "cuckoo"
                 else build_bloom_table
             )
             standing = _materialize(
@@ -753,12 +762,12 @@ def crawl_round(
         if filter_in is None:  # round 1: nothing seen yet
             schema = (
                 CUCKOO_SCHEMA
-                if filter_kind == "cuckoo"
+                if cfg.filter_kind == "cuckoo"
                 else "bucket int, bloom binary, n_items long, m_bits long,"
                 " k int"
             )
             filter_in = keyed.sparkSession.createDataFrame([], schema)
-    probe_join = use_bloom and mode == "join"
+    probe_join = cfg.use_bloom and mode == "join"
     if probe_join:
         # "join": keyed candidates flow straight into the filter-probe
         # cogroup, with the within-batch LWW dedup riding its shuffle
@@ -769,7 +778,7 @@ def crawl_round(
         # extra materializing job per round (the probe pin).
         probe = (
             filter_not_seen_cuckoo
-            if filter_kind == "cuckoo"
+            if cfg.filter_kind == "cuckoo"
             else filter_not_seen
         )
         unseen, flagged = probe(
@@ -804,14 +813,13 @@ def crawl_round(
             n_buckets=n_buckets,
         )
     allowed = apply_robots(unseen, robots)
-    mark(f"r{rnd} plan-build")
     sched = _materialize(
         politeness_rank(
-            allowed, budget,
-            windows_per_round=windows_per_round, window_ms=window_ms,
+            allowed, cfg.budget,
+            windows_per_round=cfg.windows_per_round,
+            window_ms=cfg.window_ms,
         ).withColumn("round", F.lit(rnd))
     )
-    mark(f"r{rnd} probe+robots+politeness+sched-write")
     # fuse_fetch: the job above just executed the PREVIOUS round's fused
     # fetch plan (our candidate input), so its deferred observation is now
     # resolved — collect that round's metrics here, one round late
@@ -828,43 +836,28 @@ def crawl_round(
 
     # fetch + extract + expand in ONE pass over the corpus — plan built by
     # :func:`_fetch_extract_plan` (shared with the fused-resume rebuild)
-    outlinks, obs, obs_att = _fetch_extract_plan(
-        pages_c, sched, rnd, failure_rate_pct, max_fetch_attempts,
-        keep_src=keep_src,
-    )
-    pending = None
+    outlinks, obs, obs_att = _fetch_extract_plan(pages_c, sched, rnd, cfg)
+    pending = {
+        "round": rnd,
+        "obs": obs,
+        "obs_att": obs_att,
+        "sched": sched,
+        "n_raw": n_raw,
+        "n_cand": n_cand,
+        "mode": mode if cfg.use_bloom else "exact",
+        "n_buckets": n_buckets,
+    }
     round_metrics = None
-    if fuse_fetch:
+    if cfg.fused:
         # defer: the lazy outlink plan IS next round's candidate input —
         # its stages run inside round rnd+1's sched job (or the finalize
         # flush), and the observation resolves there
         next_cand = outlinks
-        pending = {
-            "round": rnd,
-            "obs": obs,
-            "obs_att": obs_att,
-            "sched": sched,
-            "n_raw": n_raw,
-            "n_cand": n_cand,
-            "mode": mode if use_bloom else "exact",
-            "n_buckets": n_buckets,
-        }
-        mark(f"r{rnd} outlinks-deferred")
     else:
+        # the outlink write runs the fetch, resolving its observations
         next_cand = _materialize(outlinks)
-        mark(f"r{rnd} fetch+extract+outlinks-write")
-        got = obs.get
-        n_fetched = int(got["n_fetched"])
-        bytes_extracted = int(got["bytes_extracted"])
-        n_retries = n_failures = 0
-        if obs_att is not None:
-            att_got = obs_att.get  # same job as obs — no extra pass
-            n_retries = int(att_got["retries"])
-            n_failures = int(att_got["failures"])
-        round_metrics = _round_metrics_df(
-            sched, n_raw, n_cand, n_fetched, bytes_extracted,
-            n_retries, n_failures, mode if use_bloom else "exact", n_buckets,
-        )
+        round_metrics = _resolve_pending_metrics(pending)
+        pending = None
 
     # url_seen is append-only: the round's delta rides the ALREADY
     # materialized sched parquet (a lazy projection), so the union is a
@@ -879,14 +872,14 @@ def crawl_round(
     # incremental bloom maintenance: build over ONLY this round's newly-seen
     # hashes, OR into the standing table — O(delta), not O(|url_seen|)
     new_blooms = state.blooms
-    if use_bloom:
-        if filter_kind == "cuckoo":
+    if cfg.use_bloom:
+        if cfg.filter_kind == "cuckoo":
             # delete keys that aged out THIS round, then insert the round's
             # newly-scheduled keys — both O(delta), per-bucket cogroups
             upd = filter_in  # == standing, or the empty table in round 1
-            if ttl_rounds is not None:
+            if cfg.ttl_rounds is not None:
                 aged = state.url_seen.filter(
-                    F.col("first_seen_round") == rnd - ttl_rounds
+                    F.col("first_seen_round") == rnd - cfg.ttl_rounds
                 ).select("url_hash")
                 upd = delete_keys(upd, aged, n_buckets=n_buckets)
             new_blooms = _materialize(
@@ -900,9 +893,11 @@ def crawl_round(
             # instead of hitting a capacity wall. The stats read is
             # n_buckets metadata rows off the just-written parquet; the
             # common case (no over-full bucket) adds no job beyond it.
-            exact = new_seen if ttl_rounds is None else new_seen.filter(
-                F.col("first_seen_round") > rnd - ttl_rounds
-            )
+            exact = new_seen
+            if cfg.ttl_rounds is not None:
+                exact = new_seen.filter(
+                    F.col("first_seen_round") > rnd - cfg.ttl_rounds
+                )
             grown = grow_overfull_buckets(
                 new_blooms, exact.select("url_hash"),
                 n_buckets=n_buckets,
@@ -928,7 +923,6 @@ def crawl_round(
                 )
             else:
                 new_blooms = filter_in.unionByName(delta)
-    mark(f"r{rnd} filter-maintenance")
     metrics = state.metrics
     metrics_delta = None
     for piece in (prev_metrics, round_metrics):
@@ -953,7 +947,7 @@ def crawl_round(
     n_seen_next, n_pending_next = state.n_seen, state.n_pending
     if auto_scale:
         n_seen_next = state.n_seen + sched.count()
-        if fuse_fetch:
+        if cfg.fused:
             # the deferred fetch must NOT run early (counting next_cand
             # would execute it — the exact conflict VERDICT r04 named), so
             # the auto probe uses THIS round's already-resolved raw
@@ -979,7 +973,7 @@ def crawl_round(
         blooms=new_blooms,
         n_seen=n_seen_next,
         n_pending=n_pending_next,
-        filter_buckets=n_buckets if use_bloom else None,
+        filter_buckets=n_buckets if cfg.use_bloom else None,
         pending_fetch=pending,
         metrics_delta=metrics_delta,
     )
@@ -1054,34 +1048,68 @@ def _pagerank_reprioritize(
     )
 
 
-def _pagerank_round_update(
+def _crawl_inputs(
+    pages: DataFrame, robots: DataFrame, cfg: CrawlConfig
+) -> tuple[DataFrame, DataFrame]:
+    """The loop-invariant round inputs: the corpus keyed by canonical_url
+    (LWW-deduped at ingest under ``cfg.dedup_pages``) and the robots
+    broadcast side, aggregated and pinned ONCE instead of re-aggregating
+    the rule table every round."""
+    pages_c = _with_canonical(pages)
+    if cfg.dedup_pages:
+        pages_c = dedup_pages_lww(pages_c)
+    return pages_c, _materialize(robots_per_host(robots))
+
+
+def _crawl_rounds(
     state: CrawlState,
-    edges_all: DataFrame | None,
-    pagerank_iters: int,
+    pages_c: DataFrame,
+    robots_ph: DataFrame,
+    cfg: CrawlConfig,
+    rounds: int,
     catalog: Catalog | None,
-):
-    """Post-round pagerank bookkeeping, shared by :func:`run_crawl` and
-    :func:`resume_crawl` (one copy — commit ordering is crash-sensitive):
-    accumulate the round's (src, dst) edges, re-seed candidate priorities
-    from the cumulative graph, and in durable mode append the edge delta
-    at the round's tag BEFORE ``_commit_round`` writes the marker, so a
-    resume always sees the full graph behind the marker it trusts."""
+    edges_all: DataFrame | None,
+    prev_buckets: int | None,
+) -> CrawlState:
+    """Advance ``rounds`` rounds and flush — the one round loop of
+    :func:`run_crawl` and :func:`resume_crawl` (commit ordering is
+    crash-sensitive, so there is one copy).
+
+    Pagerank bookkeeping per round: accumulate the round's (src, dst)
+    edges onto ``edges_all``, re-seed candidate priorities from the
+    cumulative graph, and in durable mode append the edge delta at the
+    round's tag BEFORE ``_commit_round`` writes the marker, so a resume
+    always sees the full graph (multiplicity included) behind the marker
+    it trusts. ``prev_buckets`` is the count url_seen's storage files are
+    clustered at, so a policy step-up migrates them."""
     from dataclasses import replace
 
-    cand = state.candidates
-    edges_rnd = cand.select(
-        F.col("src_url").alias("src"), F.col("url").alias("dst")
-    )
-    edges_all = (
-        edges_rnd if edges_all is None else edges_all.unionByName(edges_rnd)
-    )
-    state = replace(
-        state,
-        candidates=_pagerank_reprioritize(cand, edges_all, pagerank_iters),
-    )
-    if catalog is not None:
-        catalog.append("link_edges", edges_rnd, tag=state.round_no)
-    return state, edges_all
+    for _ in range(rounds):
+        state = crawl_round(state, pages_c, robots_ph, **asdict(cfg))
+        if cfg.pagerank:
+            # candidates are already materialized (eager mode)
+            cand = state.candidates
+            edges_rnd = cand.select(
+                F.col("src_url").alias("src"), F.col("url").alias("dst")
+            )
+            edges_all = (
+                edges_rnd
+                if edges_all is None
+                else edges_all.unionByName(edges_rnd)
+            )
+            state = replace(
+                state,
+                candidates=_pagerank_reprioritize(
+                    cand, edges_all, cfg.pagerank_iters
+                ),
+            )
+            if catalog is not None:
+                catalog.append("link_edges", edges_rnd, tag=state.round_no)
+        if catalog is not None:
+            _maybe_rebucket(catalog, state, prev_buckets)
+            _commit_round(catalog, state, cfg.filter_kind)
+        prev_buckets = state.filter_buckets
+    return _finalize_with_catalog(state, catalog)
 
 
 def run_crawl(
@@ -1090,60 +1118,21 @@ def run_crawl(
     seeds: DataFrame,
     robots: DataFrame,
     rounds: int = 2,
-    budget: int = 8,
-    use_bloom: bool = True,
     catalog: Catalog | None = None,
-    dedup_pages: bool = False,
-    bloom_buckets: int | None = 32,
-    failure_rate_pct: int = 0,
-    max_fetch_attempts: int = 3,
-    filter_kind: str = "bloom",
-    ttl_rounds: int | None = None,
-    windows_per_round: int = 1,
-    window_ms: int = 60_000,
-    probe_confirm: str = "inline",
-    bucket_target_keys: int = 1 << 20,
-    fuse_fetch: bool = False,
-    priority_source: str = "inherit",
-    pagerank_iters: int = 4,
+    **knobs,
 ) -> CrawlState:
-    """Run ``rounds`` crawl rounds from the seed list.
+    """Run ``rounds`` crawl rounds from the seed list; ``knobs`` are the
+    :class:`CrawlConfig` fields.
 
-    ``priority_source``: "inherit" (default) decays each child's priority
-    from its parent (priority * PRIORITY_DECAY); "pagerank" re-seeds every
-    round's candidate priorities from the PageRank of the CUMULATIVE
-    outlink graph crawled so far (``pagerank_iters`` power iterations,
-    exact int64 — see :func:`_pagerank_reprioritize`). Round 1 always uses
-    the seed priorities (no graph yet). Pagerank mode runs the rounds
-    EAGER even when ``fuse_fetch=True``: the per-round graph computation
-    is itself an action consuming the deferred plan, so fusion's
-    1-job/round advantage is unreachable — eager keeps fetch metrics
-    same-round and the per-round commits resumable. Pagerank priority is
-    a crawl-QUALITY knob, priced accordingly.
-
-    With a ``catalog``, url_seen / schedule / metrics are committed per
-    round (snapshot isolation) — the resume path (`resume_crawl`) restarts
-    from the last committed round. Reference analog: ``.images_extracted``
-    markers + log_status reconciliation (``06:45-105``, SURVEY.md §2.9 T1).
-
-    Input contract: one page per canonical_url. Pass ``dedup_pages=True``
-    to enforce it at ingest (LWW on (warc_ts, url) — see
-    :func:`dedup_pages_lww`) when the corpus may contain recrawls.
-
-    ``fuse_fetch`` composes with BOTH the auto scale knobs and a catalog
-    (r5; the r4 pairwise ValueError guards are gone): auto counts come
-    from the fused path's already-resolved observations instead of
-    counting the deferred plan, and durable commits persist the bounded
-    RECOMPUTE POINT of the pending fetch (the sched parquet + a
-    fused_pending marker row) instead of the fetch's output — see
-    :func:`_commit_round` and :func:`resume_crawl`.
+    With a ``catalog``, the config is committed first (the one-row
+    ``crawl_config`` table) and url_seen / schedule / metrics are
+    committed per round (snapshot isolation) — the resume path
+    (`resume_crawl`) restarts from the last committed round with the same
+    config. Reference analog: ``.images_extracted`` markers + log_status
+    reconciliation (``06:45-105``, SURVEY.md §2.9 T1).
     """
-    pages_c = _with_canonical(pages)
-    if dedup_pages:
-        pages_c = dedup_pages_lww(pages_c)
-    # the robots broadcast side is loop-invariant: aggregate + pin it ONCE
-    # instead of re-aggregating the rule table every round
-    robots_ph = _materialize(robots_per_host(robots))
+    cfg = CrawlConfig(**knobs)
+    pages_c, robots_ph = _crawl_inputs(pages, robots, cfg)
     # statically empty: the false filter plans as an empty local relation,
     # so the optimizer drops round 1's URL-seen anti-join and prunes this
     # branch from every later url_seen union (a bare createDataFrame([]) is
@@ -1151,39 +1140,15 @@ def run_crawl(
     empty_seen = spark.createDataFrame(
         [], "url_hash long, canonical_url string, first_seen_round int"
     ).where(F.lit(False))
-    if priority_source not in ("inherit", "pagerank"):
-        raise ValueError(f"unknown priority_source {priority_source!r}")
-    pagerank = priority_source == "pagerank"
-    state = CrawlState(url_seen=empty_seen, candidates=seeds)
-    prev_filter_buckets = None
-    edges_all: DataFrame | None = None
-    for _ in range(rounds):
-        state = crawl_round(
-            state, pages_c, robots_ph, budget, use_bloom,
-            bloom_buckets=bloom_buckets,
-            failure_rate_pct=failure_rate_pct,
-            max_fetch_attempts=max_fetch_attempts,
-            filter_kind=filter_kind,
-            ttl_rounds=ttl_rounds,
-            windows_per_round=windows_per_round,
-            window_ms=window_ms,
-            probe_confirm=probe_confirm,
-            bucket_target_keys=bucket_target_keys,
-            fuse_fetch=fuse_fetch and not pagerank,
-            keep_src=pagerank,
+    if catalog is not None:
+        # 1-row control table: driver-side pyarrow write, no Spark job
+        catalog.overwrite_local(
+            "crawl_config", [(json.dumps(asdict(cfg)),)], "config string"
         )
-        if pagerank:
-            # candidates are already materialized (eager mode); the edge
-            # delta is committed at the round's tag so a resume reads the
-            # EXACT cumulative graph (multiplicity included)
-            state, edges_all = _pagerank_round_update(
-                state, edges_all, pagerank_iters, catalog
-            )
-        if catalog is not None:
-            _maybe_rebucket(catalog, state, prev_filter_buckets)
-            _commit_round(spark, catalog, state, filter_kind)
-        prev_filter_buckets = state.filter_buckets
-    return _finalize_with_catalog(state, catalog)
+    return _crawl_rounds(
+        CrawlState(url_seen=empty_seen, candidates=seeds), pages_c,
+        robots_ph, cfg, rounds, catalog, edges_all=None, prev_buckets=None,
+    )
 
 
 @_observations_kept
@@ -1274,10 +1239,7 @@ def _maybe_rebucket(
 
 
 def _commit_round(
-    spark: SparkSession,
-    catalog: Catalog,
-    state: CrawlState,
-    filter_kind: str = "bloom",
+    catalog: Catalog, state: CrawlState, filter_kind: str
 ) -> None:
     """Commit one round's DELTAS + per-partition lineage rows (T1 analog:
     the reference's ``.images_extracted`` markers + log_status counts,
@@ -1405,28 +1367,43 @@ def _commit_round(
     catalog.expire_tags("fused_pending", rnd)
 
 
+def _check_catalog_config(catalog: Catalog, cfg: CrawlConfig) -> None:
+    """Raise ``ValueError`` naming every field in which ``cfg`` differs
+    from the config the catalog was written with. Driver-side read of the
+    one-row ``crawl_config`` table, no Spark job."""
+    if not catalog.exists("crawl_config"):
+        raise ValueError(
+            "catalog has no crawl_config table: its crawl config cannot be"
+            " checked, so it cannot be resumed"
+        )
+    stored = json.loads(catalog.read_local("crawl_config")[0]["config"])
+    diff = [
+        f"{k} (catalog {stored.get(k, '<unset>')!r}, given {v!r})"
+        for k, v in asdict(cfg).items()
+        if k not in stored or stored[k] != v
+    ]
+    if diff:
+        raise ValueError(
+            "resume config differs from the catalog's crawl_config in: "
+            + "; ".join(diff)
+        )
+
+
 def resume_crawl(
     spark: SparkSession,
     pages: DataFrame,
     robots: DataFrame,
     catalog: Catalog,
     total_rounds: int,
-    budget: int = 8,
-    use_bloom: bool = True,
-    bloom_buckets: int | None = 32,
-    failure_rate_pct: int = 0,
-    max_fetch_attempts: int = 3,
-    filter_kind: str = "bloom",
-    ttl_rounds: int | None = None,
-    windows_per_round: int = 1,
-    window_ms: int = 60_000,
-    probe_confirm: str = "inline",
-    bucket_target_keys: int = 1 << 20,
-    fuse_fetch: bool = False,
-    priority_source: str = "inherit",
-    pagerank_iters: int = 4,
+    **knobs,
 ) -> CrawlState:
     """Resume from the catalog's last committed round and finish the crawl.
+
+    ``knobs`` are the :class:`CrawlConfig` fields, and they must equal the
+    config the catalog was written with: a catalog without a
+    ``crawl_config`` table, or any differing field, raises ``ValueError``
+    naming the fields before anything is read or written, instead of
+    diverging silently from the straight run.
 
     Reads trust only rows committed at or before ``round_marker`` — a crash
     between the per-table appends and the marker write leaves later-round
@@ -1434,67 +1411,40 @@ def resume_crawl(
     idempotent tagged re-append then replaces). Parquet min/max stats prune
     the other rounds' files, so each filter is a metadata operation.
 
-    The committed filter table carries the bucket count it was built with;
-    the probe MUST run at exactly that count, so a table whose count
-    conflicts with an explicit ``bloom_buckets`` (or a legacy table without
-    the column under ``bloom_buckets=None``) is discarded and rebuilt from
-    the exact key set rather than probed at the wrong layout.
+    The committed filter table carries the round and the bucket count it
+    was built with; the probe runs at exactly that count.
 
     A catalog committed in ``fuse_fetch`` mode stores no candidate rows
     for the in-flight round — it stores the RECOMPUTE POINT: the round's
     durable sched parquet plus a ``fused_pending`` marker row. Resume
     rebuilds the identical deferred plan via :func:`_fetch_extract_plan`
     (the fetch is a pure function of pages + sched + the failure knobs,
-    which the caller passes identically — same contract as every other
-    resume knob) and re-attaches the deferred observation, so the round's
-    fetch metrics resolve at the next consuming job exactly as they would
-    have in the uninterrupted run.
+    all pinned by the config check) and re-attaches the deferred
+    observation, so the round's fetch metrics resolve at the next
+    consuming job exactly as they would have in the uninterrupted run.
     """
-    done = catalog.read("round_marker").collect()[0]["round"]
-    pages_c = _with_canonical(pages)
+    cfg = CrawlConfig(**knobs)
+    _check_catalog_config(catalog, cfg)
+    done = catalog.read_local("round_marker")[0]["round"]
+    pages_c, robots_ph = _crawl_inputs(pages, robots, cfg)
     blooms = None
-    filter_buckets: int | None = None
-    # layout provenance: the count url_seen's STORAGE files were last
-    # clustered at — pre-r4 catalogs hardcoded 8; r4+ commits record it
-    # on the filter table. Seeds _maybe_rebucket so a count change on
-    # resume still migrates the old dirs (review r4 finding #2).
-    storage_buckets = 8
-    if catalog.exists(f"url_seen_{filter_kind}"):
-        ftab = catalog.read(f"url_seen_{filter_kind}")
-        if "committed_round" in ftab.columns:
-            head = ftab.select(
-                F.max("committed_round").alias("r"),
-                (
-                    F.max("n_buckets")
-                    if "n_buckets" in ftab.columns
-                    else F.lit(None).cast("int")
-                ).alias("nb"),
-            ).collect()[0]
-            frnd, tab_nb = head["r"], head["nb"]
-            if tab_nb is not None:
-                storage_buckets = int(tab_nb)
-            # bloom: a filter AHEAD of the marker is a superset of the
-            # marker's url_seen — safe (positives exact-confirmed). cuckoo:
-            # an ahead filter already applied the crashed round's TTL
-            # deletes; reusing it would replay delete_keys and risk
-            # evicting twin fingerprints (false negatives) — rebuild.
-            round_ok = filter_kind == "bloom" or frnd == done
-            # count provenance is MANDATORY (ADVICE r04): a legacy table
-            # lacking n_buckets can have been built at any count, and
-            # probing it at a different pmod layout reads missing bucket
-            # rows as "no seen keys" — silent false negatives that
-            # reschedule seen URLs. A max-bucket-id sanity check cannot
-            # verify it either (an 8-bucket table's ids all fit under 32),
-            # so an unverifiable count is a count CONFLICT: discard and
-            # rebuild from the exact key set, same as a real mismatch.
-            buckets_ok = tab_nb is not None and (
-                bloom_buckets is None or int(tab_nb) == bloom_buckets
-            )
-            if round_ok and buckets_ok:
-                blooms = ftab.drop("committed_round", "n_buckets")
-                filter_buckets = int(tab_nb)
-        # tables with no committed_round at all (pre-tagging catalogs) are
-        # likewise count-unverifiable: fall through to the rebuild path
+    filter_buckets = None
+    ftable = f"url_seen_{cfg.filter_kind}"
+    if catalog.exists(ftable):
+        ftab = catalog.read(ftable)
+        head = ftab.select(
+            F.max("committed_round").alias("r"),
+            F.max("n_buckets").alias("nb"),
+        ).collect()[0]
+        # bloom: a filter AHEAD of the marker is a superset of the
+        # marker's url_seen — safe (positives exact-confirmed). cuckoo:
+        # an ahead filter already applied the crashed round's TTL
+        # deletes; reusing it would replay delete_keys and risk
+        # evicting twin fingerprints (false negatives) — rebuild.
+        round_ok = cfg.filter_kind == "bloom" or head["r"] == done
+        if round_ok:
+            blooms = ftab.drop("committed_round", "n_buckets")
+            filter_buckets = int(head["nb"])
     url_seen = catalog.read("url_seen").filter(
         F.col("first_seen_round") <= done
     )
@@ -1503,18 +1453,17 @@ def resume_crawl(
     # not as rows — rebuild the deferred plan from the durable schedule
     fused_row = None
     if catalog.exists("fused_pending"):
-        rows = (
-            catalog.read("fused_pending")
-            .filter(F.col("round") == done)
-            .collect()
-        )
+        rows = [
+            r for r in catalog.read_local("fused_pending")
+            if r["round"] == done
+        ]
         fused_row = rows[0] if rows else None
-    auto_scale = bloom_buckets is None or probe_confirm == "auto"
+    auto_scale = cfg.bloom_buckets is None or cfg.probe_confirm == "auto"
     pending = None
     if fused_row is not None:
         sched_done = catalog.read("schedule").filter(F.col("round") == done)
         candidates, obs, obs_att = _fetch_extract_plan(
-            pages_c, sched_done, done, failure_rate_pct, max_fetch_attempts
+            pages_c, sched_done, done, cfg
         )
         pending = {
             "round": done,
@@ -1555,13 +1504,6 @@ def resume_crawl(
             else None
         )
         n_pending = candidates.count() if auto_scale else None
-    # pre-r4 catalogs lack the probe_mode/filter_buckets metrics columns;
-    # pad with NULLs so the per-round unionByName keeps resolving
-    # (review r4 finding #1)
-    if metrics is not None:
-        for col, typ in (("probe_mode", "string"), ("filter_buckets", "int")):
-            if col not in metrics.columns:
-                metrics = metrics.withColumn(col, F.lit(None).cast(typ))
     state = CrawlState(
         url_seen=url_seen,
         candidates=candidates,
@@ -1574,92 +1516,13 @@ def resume_crawl(
         filter_buckets=filter_buckets,
         pending_fetch=pending,
     )
-    robots_ph = _materialize(robots_per_host(robots))
-    prev_filter_buckets = filter_buckets or storage_buckets
-    if priority_source not in ("inherit", "pagerank"):
-        raise ValueError(f"unknown priority_source {priority_source!r}")
-    pagerank = priority_source == "pagerank"
-    edges_all: DataFrame | None = None
-    if pagerank and done > 0:
-        if catalog.exists("link_edges"):
-            # a pagerank crawl committed its per-round edge deltas —
-            # read the exact graph as of the marker (manifest tag prune)
-            edges_all = catalog.read_at("link_edges", done)
-        else:
-            # resuming a non-pagerank catalog WITH pagerank priorities:
-            # the cumulative edge set is a pure function of the committed
-            # state — every fetched page is a seen canonical present in
-            # the corpus, extracted exactly once (no TTL re-fetches, which
-            # only pagerank-committed catalogs track by multiplicity), so
-            # re-extracting links over (pages ⋈ url_seen) rebuilds it.
-            if ttl_rounds is not None:
-                # with TTL a page may have been fetched in SEVERAL rounds,
-                # each fetch contributing its outlinks again; that
-                # multiplicity is only recorded by link_edges commits, so
-                # a rebuild cannot reproduce the live run's graph —
-                # refuse instead of silently diverging (ADVICE r05)
-                raise ValueError(
-                    "pagerank resume of a catalog without link_edges"
-                    " cannot reconstruct refetch multiplicity under"
-                    " ttl_rounds — rerun with the catalog that committed"
-                    " link_edges, or without ttl_rounds"
-                )
-            seen_pages = pages_c.join(
-                state.url_seen.select("canonical_url").distinct(),
-                on="canonical_url",
-            )
-            if failure_rate_pct > 0:
-                # the live run only accumulated edges from pages whose
-                # simulated fetch SUCCEEDED (the __first_ok filter in
-                # _fetch_extract_plan); apply the IDENTICAL deterministic
-                # attempt filter here so permanently-failed pages'
-                # outlinks stay out of the rebuilt graph and post-resume
-                # priorities match an uninterrupted run (ADVICE r05)
-                ok_attempts = F.filter(
-                    F.sequence(F.lit(1), F.lit(max_fetch_attempts)),
-                    lambda a: F.pmod(
-                        F.xxhash64(F.col("canonical_url"), a), F.lit(100)
-                    )
-                    >= failure_rate_pct,
-                )
-                seen_pages = seen_pages.filter(
-                    F.try_element_at(ok_attempts, F.lit(1)).isNotNull()
-                )
-            edges_all = _materialize(
-                seen_pages.select(
-                    F.col("canonical_url").alias("src"),
-                    F.explode(extract_links(F.col("html"))).alias("href"),
-                ).select(
-                    "src",
-                    resolve_link(F.col("src"), F.col("href")).alias("dst"),
-                )
-            )
-            # backfill the rebuilt cumulative graph at tag=done: without
-            # this, link_edges would hold only deltas from done+1 onward
-            # and a SECOND resume would silently read a truncated graph
-            # (ADVICE r05). Append-at-tag keeps later per-round deltas
-            # (tags > done) composing as before.
-            catalog.append("link_edges", edges_all, tag=done)
-    for _ in range(total_rounds - done):
-        state = crawl_round(
-            state, pages_c, robots_ph, budget, use_bloom,
-            bloom_buckets=bloom_buckets,
-            failure_rate_pct=failure_rate_pct,
-            max_fetch_attempts=max_fetch_attempts,
-            filter_kind=filter_kind,
-            ttl_rounds=ttl_rounds,
-            windows_per_round=windows_per_round,
-            window_ms=window_ms,
-            probe_confirm=probe_confirm,
-            bucket_target_keys=bucket_target_keys,
-            fuse_fetch=fuse_fetch and not pagerank,
-            keep_src=pagerank,
-        )
-        if pagerank:
-            state, edges_all = _pagerank_round_update(
-                state, edges_all, pagerank_iters, catalog
-            )
-        _maybe_rebucket(catalog, state, prev_filter_buckets)
-        _commit_round(spark, catalog, state, filter_kind)
-        prev_filter_buckets = state.filter_buckets
-    return _finalize_with_catalog(state, catalog)
+    # a pagerank crawl committed its per-round edge deltas — read the
+    # exact graph as of the marker (manifest tag prune)
+    edges_all = (
+        catalog.read_at("link_edges", done) if cfg.pagerank else None
+    )
+    # url_seen's storage files are clustered at the filter's count
+    return _crawl_rounds(
+        state, pages_c, robots_ph, cfg, total_rounds - done, catalog,
+        edges_all, prev_buckets=filter_buckets,
+    )

@@ -18,6 +18,39 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: default heap ceiling: GC logs show ~6GB live at the sf1.0 bench, so 24g
+#: keeps 4x headroom and stays under the 32GB compressed-oops limit
+_MAX_DEFAULT_HEAP_MB = 24 * 1024
+
+
+def mem_total_mb() -> int:
+    """Physical memory (MemTotal of /proc/meminfo) in MiB."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+
+
+def default_driver_mem(total_mb: int | None = None) -> str:
+    """Heap for a session without ``SPARK_GRAFT_DRIVER_MEM``: 60% of
+    physical memory, capped at 24g, as a JVM size string."""
+    if total_mb is None:
+        total_mb = mem_total_mb()
+    return f"{min(_MAX_DEFAULT_HEAP_MB, total_mb * 6 // 10)}m"
+
+
+def _size_mb(size: str) -> float:
+    """MiB of a JVM size string ("12g", "4096m", "512k", bytes)."""
+    units = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+    s = size.strip().lower()
+    if s and s[-1] in units:
+        return float(s[:-1]) * units[s[-1]]
+    return float(s) / (1 << 20)
+
 
 def get_spark(
     cores: int | str | None = None,
@@ -28,6 +61,7 @@ def get_spark(
     """Build (or fetch) the engine's SparkSession.
 
     ``cores``: int N -> ``local[N]``; None -> ``$SPARK_GRAFT_CPUS`` or ``*``.
+    Heap: ``$SPARK_GRAFT_DRIVER_MEM``, else :func:`default_driver_mem`.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -36,21 +70,24 @@ def get_spark(
         n = os.cpu_count() or 8
         shuffle_partitions = int(cores) if str(cores).isdigit() else n
 
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+    driver_mem = (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem()
+    )
     # Pre-size and pre-touch the driver/executor heap (local mode: one JVM).
-    # Measured on this host: a cold 48g heap grows lazily under 32-thread
+    # Measured on a 32-thread host: a cold 48g heap grows lazily under
     # allocation pressure, and the page-fault/commit cost lands INSIDE the
     # first minutes of query time (crawl runs [198s, 102s, 30s] without
     # vs [25s, 16s, 12s] with — 6x on the bench median). -Xms=-Xmx plus
     # AlwaysPreTouch moves that cost to session startup, exactly what
     # production executors do (guide §5: size memory to the workload).
-    # 24g (was 48g): GC logs show ~6GB live at the sf1.0 bench, 24g keeps
-    # 4x headroom, stays under the 32GB compressed-oops limit, and
-    # pre-touches in seconds (48g pre-touch measured 250s on this microVM).
-    # Override knob: SPARK_GRAFT_PRETOUCH=0 disables (small test sessions).
-    java_opts = f"-Xms{driver_mem}"
-    if os.environ.get("SPARK_GRAFT_PRETOUCH", "1") != "0":
-        java_opts += " -XX:+AlwaysPreTouch"
+    # A heap larger than physical memory cannot be committed up front
+    # (the JVM fails with errno=12), so such an explicit size is left to
+    # grow lazily. Override knob: SPARK_GRAFT_PRETOUCH=0 disables.
+    java_opts = ""
+    if _size_mb(driver_mem) <= mem_total_mb():
+        java_opts = f"-Xms{driver_mem}"
+        if os.environ.get("SPARK_GRAFT_PRETOUCH", "1") != "0":
+            java_opts += " -XX:+AlwaysPreTouch"
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -13,6 +13,8 @@ Usage (local sandbox; on a cluster swap --master and add executor confs):
 The job builds the synthetic corpus from the sf dir, runs the crawl with a
 snapshot catalog at --out (resumable: re-running with a higher --rounds
 continues from the last committed round), and prints per-round metrics.
+A resume must repeat the first run's crawl flags: the catalog stores the
+crawl config, and a changed flag raises ValueError naming it.
 """
 
 from __future__ import annotations
@@ -22,7 +24,13 @@ import json
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(
+        epilog="Re-running on an existing --out resumes the crawl. The"
+        " crawl settings (--budget, --filter-kind, --ttl-rounds,"
+        " --windows-per-round, --window-ms, --fuse-fetch, --probe-confirm,"
+        " --auto-buckets, --priority-source) must match the first run, or"
+        " the resume raises ValueError naming each changed setting.",
+    )
     ap.add_argument("--sf-dir", required=True)
     ap.add_argument("--rounds", type=int, default=2)
     ap.add_argument("--budget", type=int, default=8)

@@ -225,63 +225,49 @@ def test_explicit_modes_still_exact_at_crossover(spark):
             assert got == rows
 
 
-def test_resume_from_pre_r4_catalog_schema(spark, tmp_path):
-    """Review r4 finding #1: a catalog committed before the metrics gained
-    probe_mode/filter_buckets (and before the filter table recorded
-    n_buckets) must still resume — missing metrics columns are padded
-    with NULLs and the legacy filter table is accepted at the explicit
-    bucket count."""
-    from logcrawler_spark.catalog import Catalog
-
-    pages, seeds, robots = _chain_fixture(spark, n_hosts=6, gens=4)
-    cat = Catalog(spark, str(tmp_path / "cat"))
-    run_crawl(spark, pages, seeds, robots, rounds=2, budget=8, catalog=cat)
-    # simulate the pre-r4 schema
-    cat.overwrite(
-        "metrics", cat.read("metrics").drop("probe_mode", "filter_buckets")
-    )
-    cat.overwrite("url_seen_bloom", cat.read("url_seen_bloom").drop("n_buckets"))
-
-    resumed = resume_crawl(spark, pages, robots, cat, total_rounds=4, budget=8)
-    straight = run_crawl(spark, pages, seeds, robots, rounds=4, budget=8)
-    assert _sched_rows(resumed) == _sched_rows(straight)
-    # new rounds' metrics carry the new columns; old rounds read as NULL
-    m = {int(r["round"]): r["probe_mode"] for r in
-         resumed.metrics.select("round", "probe_mode").distinct().collect()}
-    assert m[4] == "inline"
-
-
 def test_resume_bucket_change_migrates_storage(spark, tmp_path):
-    """Review r4 finding #2: resuming at a DIFFERENT bucket count than the
-    catalog was committed with must migrate the url_seen storage layout
-    (the committed count seeds the re-bucket check even though the filter
-    itself is discarded and rebuilt)."""
+    """A resume at a DIFFERENT explicit bucket count than the catalog was
+    committed with is refused before any write, so the url_seen storage is
+    never left clustered for one count while the filter probes another.
+    Resumed at the committed count, the layout needs no migration: every
+    round's dir stays within the committed bound and the schedule equals
+    the straight run's. (Migration on a policy step-up is pinned by
+    test_catalog_commits_aligned_buckets_and_resume.)"""
     import glob
     import os
 
     from logcrawler_spark.catalog import Catalog
+    from tests.test_resume import _tree_digest
 
     pages, seeds, robots = _chain_fixture(spark, n_hosts=6, gens=4)
-    cat = Catalog(spark, str(tmp_path / "cat"))
+    root = tmp_path / "cat"
+    cat = Catalog(spark, str(root))
     run_crawl(
         spark, pages, seeds, robots, rounds=2, budget=8, catalog=cat,
         bloom_buckets=8,
     )
+    before = _tree_digest(root)
+    with pytest.raises(ValueError, match="bloom_buckets"):
+        resume_crawl(
+            spark, pages, robots, cat, total_rounds=4, budget=8,
+            bloom_buckets=16,
+        )
+    assert _tree_digest(root) == before
+
     resumed = resume_crawl(
         spark, pages, robots, cat, total_rounds=4, budget=8,
-        bloom_buckets=16,
+        bloom_buckets=8,
     )
     straight = run_crawl(
-        spark, pages, seeds, robots, rounds=4, budget=8, bloom_buckets=16
+        spark, pages, seeds, robots, rounds=4, budget=8, bloom_buckets=8
     )
     assert _sched_rows(resumed) == _sched_rows(straight)
-    # rounds 1-2's dirs were consolidated + re-clustered at 16; every
-    # current dir respects the new bound
+    # no consolidation: one dir per round, each within the committed bound
     dirs = cat.current_dirs("url_seen")
-    assert len(dirs) == 3  # consolidated(<=2) + rounds 3 and 4
+    assert len(dirs) == 4
     for d in dirs:
         parts = glob.glob(os.path.join(d, "part-*"))
-        assert 0 < len(parts) <= 16
+        assert 0 < len(parts) <= 8
 
 
 def test_auto_probe_flip_in_fused_mode_one_round_stale(spark):

@@ -170,33 +170,33 @@ def test_robots_equal_length_tie_allow_wins(spark):
     assert [t[3] for t in res.schedule] == ["http://h.example.com/tie/x"]
 
 
-def test_duplicate_canonical_pages_lww(spark):
-    """dedup_pages=True: recrawled canonicals collapse to the max
-    (warc_ts, url) page in both engine and simulator (single fetch, single
-    outlink expansion)."""
-    import pandas as pd
+def _html(text, href):
+    return f'<p>{text}</p><a href="{href}">x</a>'.encode()
 
-    from logcrawler_spark.oracles.frontier_sim import simulate_crawl
-    from logcrawler_spark.plans.frontier import resume_crawl, run_crawl
 
-    def html(text, href):
-        return f'<p>{text}</p><a href="{href}">x</a>'.encode()
+#: two pages share a canonical URL (default port trap) — with
+#: dedup_pages=True the later warc_ts must win
+DUP_CANONICAL_PAGES = [
+    ("http://a.example.com/p1", "2024-01-01 00:00:00",
+     _html("old body", "/old-link")),
+    ("http://a.example.com:80/p1", "2024-01-02 00:00:00",
+     _html("new body", "/new-link")),
+    ("http://a.example.com/old-link", "2024-01-01 00:00:00",
+     _html("old target", "/x")),
+    ("http://a.example.com/new-link", "2024-01-01 00:00:00",
+     _html("new target", "/y")),
+]
 
-    pages_rows = [
-        # same canonical (default port trap) — later warc_ts must win
-        ("http://a.example.com/p1", "2024-01-01 00:00:00",
-         html("old body", "/old-link")),
-        ("http://a.example.com:80/p1", "2024-01-02 00:00:00",
-         html("new body", "/new-link")),
-        ("http://a.example.com/old-link", "2024-01-01 00:00:00",
-         html("old target", "/x")),
-        ("http://a.example.com/new-link", "2024-01-01 00:00:00",
-         html("new target", "/y")),
-    ]
+
+def _dup_canonical_inputs(spark):
+    """(pages, seeds, robots) frames of :data:`DUP_CANONICAL_PAGES`."""
     from datetime import datetime
 
     pages = spark.createDataFrame(
-        [(u, datetime.fromisoformat(t), h) for u, t, h in pages_rows],
+        [
+            (u, datetime.fromisoformat(t), h)
+            for u, t, h in DUP_CANONICAL_PAGES
+        ],
         "url string, warc_ts timestamp, html binary",
     )
     seeds = spark.createDataFrame(
@@ -206,6 +206,18 @@ def test_duplicate_canonical_pages_lww(spark):
         [], "host string, path_prefix string, allow boolean,"
         " crawl_delay_ms long",
     )
+    return pages, seeds, robots
+
+
+def test_duplicate_canonical_pages_lww(spark):
+    """dedup_pages=True: recrawled canonicals collapse to the max
+    (warc_ts, url) page in both engine and simulator (single fetch, single
+    outlink expansion)."""
+    import pandas as pd
+
+    from logcrawler_spark.oracles.frontier_sim import simulate_crawl
+
+    pages, seeds, robots = _dup_canonical_inputs(spark)
     state = run_crawl(
         spark, pages, seeds, robots, rounds=2, budget=5, dedup_pages=True
     )
@@ -214,7 +226,7 @@ def test_duplicate_canonical_pages_lww(spark):
     )
     sim = simulate_crawl(
         pd.DataFrame(
-            [(u, pd.Timestamp(t), h) for u, t, h in pages_rows],
+            [(u, pd.Timestamp(t), h) for u, t, h in DUP_CANONICAL_PAGES],
             columns=["url", "warc_ts", "html"],
         ),
         pd.DataFrame([("http://a.example.com/p1", 5.0)],
@@ -229,6 +241,54 @@ def test_duplicate_canonical_pages_lww(spark):
     # round 2 follows the NEW link only
     assert ("http://a.example.com/new-link" in [c for _r, c in got])
     assert ("http://a.example.com/old-link" not in [c for _r, c in got])
+
+
+def test_fused_resume_applies_dedup_pages(spark, tmp_path):
+    """A fused resume rebuilds the committed round's deferred fetch; with
+    dedup_pages=True it must fetch from the deduped corpus like the
+    straight run, or both duplicate pages expand their outlinks and the
+    next round diverges."""
+    from logcrawler_spark.catalog import Catalog
+
+    pages, seeds, robots = _dup_canonical_inputs(spark)
+    knobs = dict(budget=5, dedup_pages=True, fuse_fetch=True)
+    straight = run_crawl(spark, pages, seeds, robots, rounds=2, **knobs)
+    cat = Catalog(spark, str(tmp_path))
+    run_crawl(spark, pages, seeds, robots, rounds=1, catalog=cat, **knobs)
+    # the round-1 fetch is still deferred at a kill after its commit:
+    # rewind the finalize flush to the fused recompute point
+    n_raw, n_cand, mode, nb = (
+        cat.read("metrics")
+        .select("urls_raw_total", "urls_candidates_total", "probe_mode",
+                "filter_buckets")
+        .distinct().collect()[0]
+    )
+    cat.append_local(
+        "fused_pending", [(1, n_raw, n_cand, mode, nb)],
+        "round int, n_raw bigint, n_cand bigint, probe_mode string,"
+        " filter_buckets int",
+        tag=1,
+    )
+    cat.truncate_tags("pending_candidates", 1)
+    cat.truncate_tags("metrics", 1)
+    resumed = resume_crawl(
+        spark, pages, robots, cat, total_rounds=2, **knobs
+    )
+    key = lambda st: sorted(
+        (r["round"], r["host"], r["priority"], r["canonical_url"],
+         r["host_rank"], r["slot_ms"])
+        for r in st.schedule.collect()
+    )
+    assert key(resumed) == key(straight)
+    mrows = lambda df: sorted(
+        set(
+            (r["round"], r["urls_raw_total"], r["urls_candidates_total"],
+             r["pages_fetched_total"], r["bytes_extracted_total"])
+            for r in df.collect()
+        )
+    )
+    assert mrows(resumed.metrics) == mrows(straight.metrics)
+    assert mrows(cat.read("metrics")) == mrows(straight.metrics)
 
 
 def test_fetch_retry_failover_preserves_schedule(spark):
@@ -699,65 +759,6 @@ def test_pagerank_priority_durable_resume_matches_straight(spark, tmp_path):
         for r in st.schedule.collect()
     )
     assert key(resumed) == key(full)
-
-
-def test_pagerank_resume_without_link_edges_failures_parity(spark, tmp_path):
-    """ADVICE r05 (both mediums): a pagerank resume of a catalog that has
-    NO link_edges table (committed by an inherit-mode run) rebuilds the
-    cumulative graph from (pages ⋈ url_seen) — with failure_rate_pct > 0
-    the rebuild must apply the SAME deterministic attempt filter the live
-    run's _fetch_extract_plan applied, or permanently-failed pages'
-    outlinks pollute the graph and the post-resume crawl order diverges.
-    The rebuilt graph must also be BACKFILLED into link_edges at the
-    marker tag so a SECOND resume reads a complete graph."""
-    import shutil
-
-    from logcrawler_spark.catalog import Catalog
-
-    pages = generate_pages(spark, SF_SMOKE, n_hosts=N_HOSTS)
-    seeds = generate_seeds(spark, SF_SMOKE, n_hosts=N_HOSTS)
-    robots = generate_robots_rules(spark, n_hosts=N_HOSTS)
-    fail = dict(failure_rate_pct=30, max_fetch_attempts=2)
-
-    # 2 pagerank rounds committed with live (correctly failure-filtered)
-    # link_edges — then clone the catalog and DELETE link_edges from the
-    # clone, simulating a legacy catalog that never committed edges
-    cat_full = Catalog(spark, str(tmp_path / "full"))
-    run_crawl(
-        spark, pages, seeds, robots, rounds=2, budget=BUDGET,
-        priority_source="pagerank", catalog=cat_full, **fail,
-    )
-    shutil.copytree(tmp_path / "full", tmp_path / "legacy")
-    shutil.rmtree(tmp_path / "legacy" / "link_edges")
-
-    # ground truth: resume over the COMMITTED live graph (the r5-tested
-    # trusted path — no rebuild involved)
-    full = resume_crawl(
-        spark, pages, robots, cat_full, total_rounds=4, budget=BUDGET,
-        priority_source="pagerank", **fail,
-    )
-
-    # legacy catalog resumes in TWO hops: 2 -> 3 rebuilds the graph from
-    # (pages ⋈ url_seen) — it must filter failed fetches exactly like the
-    # live run and backfill link_edges at the marker tag — then 3 -> 4 is
-    # a SECOND resume that must read a complete (backfilled) graph
-    cat = Catalog(spark, str(tmp_path / "legacy"))
-    assert not cat.exists("link_edges")
-    resume_crawl(
-        spark, pages, robots, cat, total_rounds=3, budget=BUDGET,
-        priority_source="pagerank", **fail,
-    )
-    assert cat.exists("link_edges")  # backfilled at the marker tag
-    hop = resume_crawl(
-        spark, pages, robots, cat, total_rounds=4, budget=BUDGET,
-        priority_source="pagerank", **fail,
-    )
-    key = lambda st: sorted(
-        (r["round"], r["host"], r["priority"], r["canonical_url"],
-         r["host_rank"], r["slot_ms"])
-        for r in st.schedule.collect()
-    )
-    assert key(hop) == key(full)
 
 
 def test_pagerank_priority_linkless_corpus_no_crash(spark):

@@ -112,13 +112,83 @@ def test_resume_ignores_and_replaces_crashed_partial_commit(spark, tmp_path):
     assert "http://bogus.example.com/x" not in cat_urls
 
 
+def _tree_digest(root):
+    """{relative path: content hash} of every file under ``root``."""
+    import hashlib
+    import os
+
+    out = {}
+    for d, _dirs, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = hashlib.sha256(
+                    fh.read()
+                ).hexdigest()
+    return out
+
+
+def test_resume_refuses_changed_config(spark, tmp_path):
+    """run_crawl commits its config with the catalog; a resume whose
+    config differs in any field raises ValueError naming it — before any
+    Spark job or catalog write — instead of diverging from the straight
+    run. Covers the knobs whose change used to take a silent rebuild path
+    (a filterless catalog resumed with a filter, a different bucket count)
+    and those that diverge outright (priority source, fetch mode, page
+    dedup). A catalog without a crawl_config table is refused too."""
+    import shutil
+
+    import pytest
+
+    pages = generate_pages(spark, SF_SMOKE, n_hosts=N_HOSTS)
+    seeds = generate_seeds(spark, SF_SMOKE, n_hosts=N_HOSTS)
+    robots = generate_robots_rules(spark, n_hosts=N_HOSTS)
+    root = tmp_path / "cat"
+    cat = Catalog(spark, str(root))
+    run_crawl(spark, pages, seeds, robots, rounds=1, budget=BUDGET, catalog=cat)
+    before = _tree_digest(root)
+    sc = spark.sparkContext
+
+    def refused(match, **knobs):
+        sc.setJobGroup("resume-refusal", "config check")
+        try:
+            with pytest.raises(ValueError, match=match):
+                resume_crawl(
+                    spark, pages, robots, cat, total_rounds=2,
+                    budget=BUDGET, **knobs,
+                )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert not sc.statusTracker().getJobIdsForGroup("resume-refusal")
+        assert _tree_digest(root) == before
+
+    for field, value in (
+        ("use_bloom", False),
+        ("bloom_buckets", 16),
+        ("priority_source", "pagerank"),
+        ("fuse_fetch", True),
+        ("dedup_pages", True),
+    ):
+        refused(field, **{field: value})
+    # every differing field is named
+    refused("bloom_buckets.*fuse_fetch", bloom_buckets=None, fuse_fetch=True)
+
+    shutil.rmtree(root / "crawl_config")
+    before = _tree_digest(root)
+    refused("crawl_config")
+
+
 def test_resume_with_bloom_after_bloomless_run_does_not_reschedule(
     spark, tmp_path
 ):
     """Catalog has url_seen but NO bloom table (crawled with
-    use_bloom=False): resuming with use_bloom=True must bootstrap the bloom
-    BEFORE the first probe — probing an empty table would mark every seen
-    URL definitely-new and re-schedule it."""
+    use_bloom=False). Resuming it with use_bloom=True would probe a filter
+    the catalog never built; that resume is refused before any write, so
+    nothing is rescheduled. Resuming with the committed (bloomless) config
+    schedules no URL twice and ends on the straight bloomless run's
+    url_seen."""
+    import pytest
+
     pages = generate_pages(spark, SF_SMOKE, n_hosts=N_HOSTS)
     seeds = generate_seeds(spark, SF_SMOKE, n_hosts=N_HOSTS)
     robots = generate_robots_rules(spark, n_hosts=N_HOSTS)
@@ -132,9 +202,17 @@ def test_resume_with_bloom_after_bloomless_run_does_not_reschedule(
         use_bloom=False, catalog=cat,
     )
     assert not cat.exists("url_seen_bloom")
+    before = _tree_digest(tmp_path)
+    with pytest.raises(ValueError, match="use_bloom"):
+        resume_crawl(
+            spark, pages, robots, cat, total_rounds=3, budget=BUDGET,
+            use_bloom=True,
+        )
+    assert _tree_digest(tmp_path) == before
+
     resumed = resume_crawl(
         spark, pages, robots, cat, total_rounds=3, budget=BUDGET,
-        use_bloom=True,
+        use_bloom=False,
     )
     # no URL scheduled twice, and the final sets match the bloomless run
     dups = (
@@ -175,8 +253,8 @@ def test_resume_cuckoo_ttl_rejects_ahead_filter_and_rebuilds(spark, tmp_path):
     # tagged round 4 is committed, but round_marker still says 3
     cat.overwrite(
         "url_seen_cuckoo",
-        spark.createDataFrame([], CUCKOO_SCHEMA).withColumn(
-            "committed_round", F.lit(4)
+        spark.createDataFrame([], CUCKOO_SCHEMA).withColumns(
+            {"committed_round": F.lit(4), "n_buckets": F.lit(32)}
         ),
     )
     resumed = resume_crawl(
@@ -205,57 +283,6 @@ def test_resume_cuckoo_ttl_rejects_ahead_filter_and_rebuilds(spark, tmp_path):
         F.col("first_seen_round") > rounds - ttl
     ).count()
     assert n_items == expected
-
-
-def test_resume_discards_legacy_filter_without_bucket_count(spark, tmp_path):
-    """Pre-r4 catalogs committed the filter table WITHOUT the n_buckets
-    column. Its layout count is unverifiable — reusing it at a different
-    explicit bloom_buckets would probe the wrong pmod layout, and a missing
-    bucket row reads as 'no seen keys': silent false negatives that
-    reschedule seen URLs (ADVICE r04). Resume must treat the missing column
-    as a count conflict and rebuild from the exact key set."""
-    pages = generate_pages(spark, SF_SMOKE, n_hosts=N_HOSTS)
-    seeds = generate_seeds(spark, SF_SMOKE, n_hosts=N_HOSTS)
-    robots = generate_robots_rules(spark, n_hosts=N_HOSTS)
-
-    full = run_crawl(
-        spark, pages, seeds, robots, rounds=3, budget=BUDGET, bloom_buckets=8
-    )
-    cat = Catalog(spark, str(tmp_path))
-    run_crawl(
-        spark, pages, seeds, robots, rounds=2, budget=BUDGET,
-        bloom_buckets=32, catalog=cat,
-    )
-    # strip n_buckets to simulate the legacy table (built at 32)
-    legacy = cat.read("url_seen_bloom").drop("n_buckets")
-    import logcrawler_spark.utils as U
-
-    legacy = U.materialize(legacy)
-    cat.overwrite("url_seen_bloom", legacy)
-    # resume at bloom_buckets=8 — reusing the 32-bucket table here would
-    # probe pmod-8 buckets of a pmod-32 layout
-    resumed = resume_crawl(
-        spark, pages, robots, cat, total_rounds=3, budget=BUDGET,
-        bloom_buckets=8,
-    )
-    dups = (
-        resumed.schedule.groupBy("canonical_url").count()
-        .filter(F.col("count") > 1).count()
-    )
-    assert dups == 0
-    def sched_key(df):
-        return [
-            tuple(r)
-            for r in df.select(
-                "round", "host", "priority", "canonical_url", "host_rank",
-                "slot_ms",
-            )
-            .orderBy("round", "host", F.col("priority").desc(),
-                     "canonical_url")
-            .collect()
-        ]
-
-    assert sched_key(resumed.schedule) == sched_key(full.schedule)
 
 
 def _restore_pre_flush(spark, cat, rnd):
