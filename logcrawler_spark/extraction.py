@@ -23,11 +23,8 @@ from __future__ import annotations
 import re
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from logcrawler_spark.functions.urls import resolve_link
 
 _P_RE = re.compile(r"<p>(.*?)</p>", re.S)
 _A_RE = re.compile(r'<a\s+href="([^"]*)"')
@@ -78,21 +75,4 @@ def extract_text_and_links(html: pd.Series) -> pd.DataFrame:
     s = html.str.decode("utf-8", errors="replace")
     return pd.DataFrame(
         {"text": s.str.findall(_P_RE).str.join(_WS), "hrefs": s.str.findall(_A_RE)}
-    )
-
-
-def extract_outlinks(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    """pages -> one row per (page url, resolved outlink url).
-
-    Explode stays JVM-side; only the href scan is Python (Arrow-batched).
-    """
-    return (
-        pages.select(
-            F.col(url_col).alias("src_url"),
-            F.explode(extract_links(F.col("html"))).alias("href"),
-        )
-        .select(
-            "src_url",
-            resolve_link(F.col("src_url"), F.col("href")).alias("out_url"),
-        )
     )

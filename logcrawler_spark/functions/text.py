@@ -68,12 +68,6 @@ def stopword_ratio(text: Column, lang: str = "en") -> Column:
     return stopword_ratio_from(tokens(text), lang)
 
 
-def lang_score(text: Column, lang: str) -> Column:
-    """Per-language score = fraction of tokens that are that language's
-    stopwords (n-gram-heuristic language ID, SQL-expressible)."""
-    return stopword_ratio(text, lang)
-
-
 def lang_id_from(toks: Column) -> Column:
     """argmax over language scores from a precomputed token array; ties ->
     lexicographically first lang; all-zero -> 'und' (undetermined).

@@ -124,15 +124,6 @@ def url_hash(url: Column) -> Column:
     return F.xxhash64(surt(url))
 
 
-def host_salt(url: Column, n_salts: int) -> Column:
-    """Sub-partition salt for mega-host skew (SURVEY.md §4 R12).
-
-    Salting is used ONLY for shuffle distribution; per-host budgets are
-    computed per host *after* windowing (two-phase rank, SURVEY.md §7.4.4).
-    """
-    return F.pmod(F.xxhash64(url), F.lit(n_salts))
-
-
 def resolve_link(base_url: Column, href: Column) -> Column:
     """Resolve an outlink href against its page URL (absolute/relative/
     protocol-relative/root-relative), as column expressions.

@@ -56,19 +56,3 @@ def politeness_budget(
         .withColumnRenamed("__rn", "slot")
         .drop("__prn")
     )
-
-
-def fetch_slots(
-    df: DataFrame,
-    host_col: str,
-    order: list[Column],
-    crawl_delay_ms_col: str = "crawl_delay_ms",
-    default_delay_ms: int = 200,
-) -> DataFrame:
-    """Assign each scheduled URL a politeness fetch offset within its host:
-    ``slot_ms = (rank-1) * crawl_delay_ms`` — the declarative analog of the
-    reference's inter-batch sleep."""
-    w = Window.partitionBy(host_col).orderBy(*order)
-    rank = F.row_number().over(w)
-    delay = F.coalesce(F.col(crawl_delay_ms_col), F.lit(default_delay_ms))
-    return df.withColumn("slot_ms", (rank - 1).cast("long") * delay)

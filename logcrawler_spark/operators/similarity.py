@@ -112,23 +112,6 @@ def table_positions(dim: int, n_bits: int, table: int) -> tuple[int, ...]:
     return tuple((i * dim // n_bits + table) % dim for i in range(n_bits))
 
 
-def multi_table_buckets(
-    vec: Column, dim: int, n_bits: int, n_tables: int
-) -> Column:
-    """array<struct<tbl int, bucket string>> — one sign bucket per table."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("tbl"),
-                sign_bucket(vec, table_positions(dim, n_bits, t)).alias(
-                    "bucket"
-                ),
-            )
-            for t in range(n_tables)
-        ]
-    )
-
-
 def assign_ivf_cells(
     corpus: DataFrame,
     vec_col: str,

@@ -1,13 +1,13 @@
 """Window-function operators (SURVEY.md §2.5).
 
-- lag-diff          (W1, ``tests/frame_time_diffrences.py:60-72``)
-- parity row-number (W2, ``02_combine_logs.py:36,62-66``)
 - carry-forward     (W3, sparse->dense symbol reconstruction,
                      ``11_input_behavior_symbols.py:107-111,261-295``)
 - top-1 / top-k per group (W4/O4, ``PatchExecutor.py:191-209``,
                      the frontier's per-host budget)
 
 All are single-shuffle window passes on the partition key; no Python.
+Lag-diff (W1) and parity row-numbering (W2) are one window expression
+each, written inline by ``q_window_lag_fill`` and ``q_parity_tag``.
 """
 
 from __future__ import annotations
@@ -15,25 +15,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def lag_diff(
-    df: DataFrame, key: str, order: str, value: str, out: str = "diff"
-) -> DataFrame:
-    """value - lag(value) per key, ordered (consecutive frame-time deltas)."""
-    w = Window.partitionBy(key).orderBy(F.col(order))
-    return df.withColumn(out, F.col(value) - F.lag(value).over(w))
-
-
-def parity_tag(
-    df: DataFrame, key: str, order: str, names: tuple[str, str], out: str = "tag"
-) -> DataFrame:
-    """Alternate two labels by row position per key (camera-parity analog)."""
-    w = Window.partitionBy(key).orderBy(F.col(order))
-    rn = F.row_number().over(w)
-    return df.withColumn(
-        out, F.when(rn % 2 == 1, F.lit(names[0])).otherwise(F.lit(names[1]))
-    )
 
 
 def carry_forward(

@@ -38,6 +38,8 @@ _MIX = np.uint64(0x9E3779B97F4A7C15)  # golden-ratio odd constant
 _M1 = np.uint64(0xBF58476D1CE4E5B9)  # splitmix64 finalizer constants
 _M2 = np.uint64(0x94D049BB133111EB)
 
+BLOOM_SCHEMA = "bucket int, bloom binary, n_items long, m_bits long, k int"
+
 
 def _mix64(x: np.ndarray) -> np.ndarray:
     """splitmix64 finalizer — folds high bits into low.
@@ -97,7 +99,7 @@ def build_bloom_table(
     )
     return bucketed.groupBy("__bucket").applyInPandas(
         _build,
-        schema="bucket int, bloom binary, n_items long, m_bits long, k int",
+        schema=BLOOM_SCHEMA,
     )
 
 
@@ -135,7 +137,7 @@ def merge_bloom_tables(
 
     return old.unionByName(delta).groupBy("bucket").applyInPandas(
         _merge,
-        schema="bucket int, bloom binary, n_items long, m_bits long, k int",
+        schema=BLOOM_SCHEMA,
     )
 
 
@@ -146,31 +148,28 @@ def filter_not_seen(
     hash_col: str = "url_hash",
     key_cols: list[str] | None = None,
     n_buckets: int = 32,
-    bucket_transform=None,
     return_flagged: bool = False,
     confirm: str = "join",
 ):
     """candidates minus url_seen, with optional Bloom pre-split.
 
-    Definitely-new rows (Bloom negative) bypass the anti-join shuffle;
-    maybe-seen rows are confirmed exactly. Without ``blooms``, a plain
-    left-anti join (both sides co-bucketed by the catalog layout).
+    Without ``blooms``: one plain left-anti join (both sides co-bucketed by
+    the catalog layout) — the crawl's inline confirm, no Python boundary.
 
-    Probe shape: candidates are cogrouped with the bloom table on the hash
-    bucket — one candidate shuffle, one bloom row per task, no driver
-    collect and no multi-GB broadcast (VERDICT r01 weak #1). The flagged
-    frame is materialized ONCE so the fresh/confirm split does not
-    re-evaluate the probe kernel (ADVICE r01).
+    With ``blooms``: definitely-new rows (Bloom negative) bypass the
+    anti-join; maybe-seen rows are confirmed exactly. Candidates are
+    cogrouped with the bloom table on the hash bucket — one candidate
+    shuffle, one bloom row per task, no driver collect and no multi-GB
+    broadcast (VERDICT r01 weak #1). The flagged frame is materialized
+    ONCE so the fresh/confirm split does not re-evaluate the probe kernel
+    (ADVICE r01). The probe keeps duplicate keys; a caller that wants one
+    row per key dedups upstream (the crawl runs :func:`dedup_batch` in the
+    JVM first).
 
-    ``bucket_transform``: optional pandas fn applied to each candidate
-    bucket group BEFORE probing. Because the bucket is pmod(url_hash) and
-    url_hash is a function of the canonical key, all rows sharing a key are
-    colocated — so per-key work (e.g. the crawl's within-batch LWW dedup)
-    rides the probe's shuffle instead of paying its own window shuffle.
-
-    ``return_flagged``: also return the materialized flagged frame (rows ==
-    post-transform candidates), so callers can count candidates from its
-    parquet footers instead of running another job.
+    ``return_flagged``: also return the materialized flagged frame (the
+    candidates plus their ``__maybe`` filter verdict), so callers can read
+    the probe's output or count it from parquet footers without another
+    job.
 
     ``n_buckets`` must be a power of two: the JVM side buckets with signed
     ``pmod`` and the numpy probe with uint64 wrap-around modulo — they agree
@@ -184,7 +183,7 @@ def filter_not_seen(
     assert n_buckets & (n_buckets - 1) == 0, "n_buckets must be a power of 2"
     keys = key_cols or [hash_col]
     if blooms is None:
-        assert bucket_transform is None and not return_flagged
+        assert not return_flagged
         return candidates.join(url_seen, on=keys, how="left_anti")
 
     def _bloom_probe(bloom_pdf: pd.DataFrame, hs: np.ndarray) -> np.ndarray:
@@ -199,7 +198,7 @@ def filter_not_seen(
 
     return cogroup_filter_not_seen(
         candidates, url_seen, blooms, _bloom_probe, hash_col, keys,
-        n_buckets, bucket_transform, return_flagged,
+        n_buckets, return_flagged,
     )
 
 
@@ -211,7 +210,6 @@ def cogroup_filter_not_seen(
     hash_col: str,
     keys: list[str],
     n_buckets: int,
-    bucket_transform=None,
     return_flagged: bool = False,
 ):
     """Shared cogrouped-probe skeleton for any per-bucket membership filter
@@ -241,8 +239,6 @@ def cogroup_filter_not_seen(
     )
 
     def _probe(cand_pdf: pd.DataFrame, tbl_pdf: pd.DataFrame) -> pd.DataFrame:
-        if bucket_transform is not None:
-            cand_pdf = bucket_transform(cand_pdf)
         out = cand_pdf[out_cols].copy()
         if tbl_pdf.empty:
             out["__maybe"] = False  # no filter row -> bucket has no seen keys

@@ -39,6 +39,7 @@ SLOTS_PER_ROW = 4
 _FP_CONST = np.uint64(0x5BD1E9955BD1E995)  # odd multiplier for fp -> row hop
 _TARGET_LOAD = 0.85  # auto-sizing aims below the ~95% cuckoo feasibility edge
 _MIN_M_ROWS = 1 << 10
+_U64_MASK = (1 << 64) - 1
 
 CUCKOO_SCHEMA = (
     "bucket int, table binary, m_rows long, n_items long, n_kicked long,"
@@ -86,7 +87,7 @@ def _insert_many(
     fps = _fingerprints(hashes)
     r1s = _row1(hashes, m_rows)
     hops = _fp_hop(fps, m_rows)
-    rng_state = np.uint64(0x9E3779B97F4A7C15)
+    rng_state = 0x9E3779B97F4A7C15
     kicks = 0
     homeless: list[int] = []
     for fp, r1, hop in zip(fps, r1s, hops):
@@ -104,12 +105,12 @@ def _insert_many(
         row = int(r1)
         cur = np.uint16(fp)
         for _ in range(max_kicks):
-            # deterministic slot choice (splitmix-style counter)
+            # deterministic slot choice: a 64-bit LCG in Python ints, masked
+            # (numpy uint64 scalars wrap the same way but flag it as overflow)
             rng_state = (
-                rng_state * np.uint64(6364136223846793005)
-                + np.uint64(1442695040888963407)
-            )
-            slot = int(rng_state >> np.uint64(60)) % SLOTS_PER_ROW
+                rng_state * 6364136223846793005 + 1442695040888963407
+            ) & _U64_MASK
+            slot = (rng_state >> 60) % SLOTS_PER_ROW
             cur, table[row, slot] = table[row, slot], cur
             kicks += 1
             row = int(
@@ -177,6 +178,33 @@ def _stash_arr(blob) -> np.ndarray:
     )
 
 
+def _table_row(
+    bucket: int, table: np.ndarray, n_items: int, kicks: int,
+    stash: np.ndarray,
+) -> pd.DataFrame:
+    """One bucket's :data:`CUCKOO_SCHEMA` row."""
+    return pd.DataFrame(
+        {
+            "bucket": [bucket],
+            "table": [table.tobytes()],
+            "m_rows": [table.shape[0]],
+            "n_items": [n_items],
+            "n_kicked": [kicks],
+            "stash": [stash.tobytes()],
+        }
+    )
+
+
+def _fresh_row(bucket: int, hashes: np.ndarray, m: int) -> pd.DataFrame:
+    """A bucket row whose new ``m``-row table holds ``hashes``."""
+    table = np.zeros((m, SLOTS_PER_ROW), dtype=np.uint16)
+    kicks, homeless = _insert_many(table, hashes)
+    return _table_row(
+        bucket, table, len(hashes), kicks,
+        np.asarray(homeless, dtype=np.uint16),
+    )
+
+
 def build_cuckoo_table(
     url_seen: DataFrame,
     hash_col: str = "url_hash",
@@ -196,23 +224,11 @@ def build_cuckoo_table(
     mins = min_m_rows_by_bucket or {}
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
-        hashes = pdf[hash_col].to_numpy().astype(np.uint64)
         bkt = int(pdf["__bucket"].iloc[0])
         m = m_rows if m_rows is not None else _auto_m_rows(len(pdf))
         m = max(m, int(mins.get(bkt, 0)))
-        table = np.zeros((m, SLOTS_PER_ROW), dtype=np.uint16)
-        kicks, homeless = _insert_many(table, hashes)
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["__bucket"].iloc[0])],
-                "table": [table.tobytes()],
-                "m_rows": [m],
-                "n_items": [len(pdf)],
-                "n_kicked": [kicks],
-                "stash": [
-                    np.asarray(homeless, dtype=np.uint16).tobytes()
-                ],
-            }
+        return _fresh_row(
+            bkt, pdf[hash_col].to_numpy().astype(np.uint64), m
         )
 
     bucketed = url_seen.withColumn(
@@ -229,41 +245,26 @@ def _updated(
     hash_col: str,
     n_buckets: int,
     delete: bool,
-    m_rows: int | None = None,
 ) -> DataFrame:
     """Cogrouped per-bucket insert/delete of ``keys`` into the standing
     tables — touches ONLY buckets holding keys; other rows pass through.
-    ``m_rows`` sizes bootstrap builds of previously-missing buckets
-    (None = auto-size from the key count)."""
+    An insert into a previously-missing bucket builds it, auto-sized from
+    its key count."""
 
     def _apply(tbl_pdf: pd.DataFrame, key_pdf: pd.DataFrame) -> pd.DataFrame:
         if tbl_pdf.empty:
             # deletes into a missing bucket are no-ops; inserts bootstrap
             if delete or key_pdf.empty:
                 return tbl_pdf.iloc[0:0]
-            bucket = int(key_pdf["__bucket"].iloc[0])
-            m = m_rows if m_rows is not None else _auto_m_rows(len(key_pdf))
-            table = np.zeros((m, SLOTS_PER_ROW), dtype=np.uint16)
-            kicks, homeless = _insert_many(
-                table, key_pdf[hash_col].to_numpy().astype(np.uint64)
-            )
-            return pd.DataFrame(
-                {
-                    "bucket": [bucket],
-                    "table": [table.tobytes()],
-                    "m_rows": [m],
-                    "n_items": [len(key_pdf)],
-                    "n_kicked": [kicks],
-                    "stash": [
-                        np.asarray(homeless, dtype=np.uint16).tobytes()
-                    ],
-                }
+            return _fresh_row(
+                int(key_pdf["__bucket"].iloc[0]),
+                key_pdf[hash_col].to_numpy().astype(np.uint64),
+                _auto_m_rows(len(key_pdf)),
             )
         row = tbl_pdf.iloc[0]
-        m = int(row["m_rows"])
         table = (
             np.frombuffer(row["table"], dtype=np.uint16)
-            .reshape(m, SLOTS_PER_ROW)
+            .reshape(int(row["m_rows"]), SLOTS_PER_ROW)
             .copy()
         )
         stash = _stash_arr(row["stash"])
@@ -282,16 +283,7 @@ def _updated(
                         [stash, np.asarray(homeless, dtype=np.uint16)]
                     )
                 n_items += len(hashes)
-        return pd.DataFrame(
-            {
-                "bucket": [int(row["bucket"])],
-                "table": [table.tobytes()],
-                "m_rows": [m],
-                "n_items": [n_items],
-                "n_kicked": [kicks],
-                "stash": [stash.tobytes()],
-            }
-        )
+        return _table_row(int(row["bucket"]), table, n_items, kicks, stash)
 
     keyed = keys.withColumn(
         "__bucket", F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int")
@@ -305,11 +297,10 @@ def _updated(
 
 def insert_keys(
     cuckoos: DataFrame, keys: DataFrame, hash_col: str = "url_hash",
-    n_buckets: int = 32, m_rows: int | None = None,
+    n_buckets: int = 32,
 ) -> DataFrame:
     """Incrementally add a key delta (O(delta) work, per-bucket)."""
-    return _updated(cuckoos, keys, hash_col, n_buckets, delete=False,
-                    m_rows=m_rows)
+    return _updated(cuckoos, keys, hash_col, n_buckets, delete=False)
 
 
 def grow_overfull_buckets(
@@ -385,7 +376,6 @@ def filter_not_seen_cuckoo(
     hash_col: str = "url_hash",
     key_cols: list[str] | None = None,
     n_buckets: int = 32,
-    bucket_transform=None,
     return_flagged: bool = False,
     confirm: str = "join",
 ):
@@ -400,49 +390,6 @@ def filter_not_seen_cuckoo(
     keys = key_cols or [hash_col]
     return cogroup_filter_not_seen(
         candidates, url_seen, cuckoos, cuckoo_probe_rows, hash_col, keys,
-        n_buckets, bucket_transform, return_flagged,
+        n_buckets, return_flagged,
     )
 
-
-def probe_maybe_seen(
-    candidates: DataFrame,
-    cuckoos: DataFrame,
-    hash_col: str = "url_hash",
-    n_buckets: int = 32,
-) -> DataFrame:
-    """candidates + __maybe boolean, via the same cogrouped bucket join the
-    Bloom probe uses (no driver collect / broadcast)."""
-    from pyspark.sql.types import BooleanType, StructField, StructType
-
-    out_cols = list(candidates.columns)
-    # a FRESH StructType — StructType.add mutates in place and
-    # DataFrame.schema is cached, so the caller's frame would grow a
-    # phantom __maybe column (ADVICE r02)
-    schema = StructType(
-        list(candidates.schema.fields)
-        + [StructField("__maybe", BooleanType())]
-    )
-
-    def _probe(cand_pdf: pd.DataFrame, tbl_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = cand_pdf[out_cols].copy()
-        if tbl_pdf.empty:
-            out["__maybe"] = False
-            return out
-        row = tbl_pdf.iloc[0]
-        table = np.frombuffer(row["table"], dtype=np.uint16).reshape(
-            int(row["m_rows"]), SLOTS_PER_ROW
-        )
-        hashes = cand_pdf[hash_col].to_numpy().astype(np.uint64)
-        out["__maybe"] = _probe_many(
-            table, _stash_arr(row["stash"]), hashes
-        )
-        return out
-
-    return (
-        candidates.withColumn(
-            "__bucket", F.pmod(F.col(hash_col), F.lit(n_buckets)).cast("int")
-        )
-        .groupBy("__bucket")
-        .cogroup(cuckoos.groupBy("bucket"))
-        .applyInPandas(_probe, schema=schema)
-    )

@@ -45,10 +45,12 @@ from logcrawler_spark.functions.urls import (
     url_path,
 )
 from logcrawler_spark.plans.bloom import (
+    BLOOM_SCHEMA,
     build_bloom_table,
     filter_not_seen,
     merge_bloom_tables,
 )
+from logcrawler_spark.plans.cuckoo import CUCKOO_SCHEMA
 
 PRIORITY_DECAY = 0.5  # child priority = parent * decay (exact in binary fp)
 _BLOOM_COMPACT_EVERY = 8  # rounds between bloom-delta compactions
@@ -119,18 +121,6 @@ def dedup_batch(cand: DataFrame) -> DataFrame:
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def _lww_dedup_pandas(pdf):
-    """pandas twin of :func:`dedup_batch` (identical order keys), applied
-    per url_hash bucket inside the bloom-probe kernel — rows sharing a
-    canonical_url share the bucket, so the dedup needs no shuffle of its
-    own."""
-    return pdf.sort_values(
-        ["canonical_url", "priority", "host", "path"],
-        ascending=[True, False, True, True],
-        kind="mergesort",
-    ).drop_duplicates("canonical_url", keep="first")
 
 
 def robots_per_host(robots: DataFrame) -> DataFrame:
@@ -351,14 +341,17 @@ class CrawlConfig:
 
     ``budget`` is the per-host politeness budget of one fetch window.
 
-    ``use_bloom`` maintains a URL-seen membership filter; without it every
-    round confirms with the exact anti-join and metrics label it "exact".
-    ``filter_kind`` selects the filter: "bloom" (append-only, OR-mergeable)
-    or "cuckoo" (supports deletion). ``ttl_rounds`` enables recrawl: a URL
-    seen at round s becomes schedulable again at round s + ttl_rounds —
-    its key is DELETED from the cuckoo filter when it ages out (Bloom
-    cannot express this, so TTL requires cuckoo), and the exact confirm
-    runs against only the un-aged url_seen rows.
+    ``use_bloom`` asks for a URL-seen membership filter, kept only where a
+    round may probe it: a crawl is *filtered* (:attr:`filtered`) iff
+    ``use_bloom`` and ``probe_confirm != "inline"``. Every other crawl is
+    the one exact anti-join plan, labelled "inline", and builds, commits
+    and reads no filter. ``filter_kind`` selects the filter: "bloom"
+    (append-only, OR-mergeable) or "cuckoo" (supports deletion).
+    ``ttl_rounds`` enables recrawl: a URL seen at round s becomes
+    schedulable again at round s + ttl_rounds — the exact confirm runs
+    against only the un-aged url_seen rows, and a filtered crawl DELETES
+    the aged key from its cuckoo filter (Bloom cannot express this, so TTL
+    requires cuckoo).
 
     ``failure_rate_pct`` > 0 turns on the S6 transient-failure simulation:
     each fetch attempt fails deterministically with that percent chance
@@ -371,19 +364,19 @@ class CrawlConfig:
 
     Scale-adaptive knobs (VERDICT r03 item 1):
 
-    - ``probe_confirm`` selects the URL-seen confirm shape. "inline" runs
-      the JVM window dedup (:func:`dedup_batch`) and one left-anti join
-      of every deduped candidate against the effective url_seen — no
-      Python boundary and no job of its own; the membership filter is
-      maintained but not probed. "join" probes the filter in a cogrouped
-      pandas kernel (with the LWW dedup riding its shuffle), pins the
+    - ``probe_confirm`` selects the URL-seen confirm shape. Every round
+      first runs the JVM window dedup (:func:`dedup_batch`). "inline" then
+      runs one left-anti join of every deduped candidate against the
+      effective url_seen — no Python boundary and no job of its own.
+      "join" probes the filter in a cogrouped pandas kernel, pins the
       result, and anti-joins only the filter positives. "auto" picks per
       round from the tracked counts: "inline" while |url_seen| <=
       ``_PROBE_SWITCH_FACTOR`` x |pending candidates| (a growing crawl's
       steady state), else "join" (a mature frontier, where filter
       negatives skip the exact join). All modes are oracle-exact; the
       switch only changes cost shape. The counts are parquet-footer
-      metadata off the previous round's materialized tables.
+      metadata off the previous round's materialized tables, kept only by
+      a filtered crawl (:attr:`auto_scale`).
     - ``bloom_buckets=None`` derives the bucket count from |url_seen| via
       :func:`bucket_count_policy` (with ``bucket_target_keys`` keys per
       bucket, shared with the catalog's url_seen storage bucketing in
@@ -453,6 +446,19 @@ class CrawlConfig:
             )
 
     @property
+    def filtered(self) -> bool:
+        """Whether the crawl keeps a URL-seen filter (a round may probe it)."""
+        return self.use_bloom and self.probe_confirm != "inline"
+
+    @property
+    def auto_scale(self) -> bool:
+        """Whether rounds track |url_seen| and |pending| for the auto
+        probe switch or the bucket-count policy."""
+        return self.filtered and (
+            self.bloom_buckets is None or self.probe_confirm == "auto"
+        )
+
+    @property
     def pagerank(self) -> bool:
         return self.priority_source == "pagerank"
 
@@ -466,10 +472,11 @@ class CrawlConfig:
 class CrawlState:
     """Round-over-round state; every df is materialized (lineage cut).
 
-    ``blooms`` is the standing per-bucket Bloom table covering ALL of
-    ``url_seen`` (invariant: no key in url_seen may test bloom-negative).
-    It is maintained incrementally — each round ORs in only that round's
-    newly-scheduled hashes.
+    ``blooms`` is the standing per-bucket filter table (Bloom or cuckoo)
+    covering ALL of the effective ``url_seen`` (invariant: no such key may
+    test filter-negative); None in a crawl that is not
+    :attr:`CrawlConfig.filtered`. It is maintained incrementally — each
+    round adds only that round's newly-scheduled hashes.
 
     ``n_seen`` / ``n_pending`` are driver-side row counts (parquet-footer
     metadata off the already-materialized per-round tables, never a data
@@ -684,7 +691,6 @@ def crawl_round(
     from pyspark.sql import Observation
 
     from logcrawler_spark.plans.cuckoo import (
-        CUCKOO_SCHEMA,
         build_cuckoo_table,
         delete_keys,
         filter_not_seen_cuckoo,
@@ -695,14 +701,14 @@ def crawl_round(
     cfg = CrawlConfig(*cfg_args, **cfg_kwargs)
     rnd = state.round_no + 1
     # resolve this round's scale knobs BEFORE any plan is built
-    auto_scale = cfg.bloom_buckets is None or cfg.probe_confirm == "auto"
     want_buckets = (
         bucket_count_policy(state.n_seen, cfg.bucket_target_keys)
         if cfg.bloom_buckets is None
         else cfg.bloom_buckets
     )
     n_buckets = state.filter_buckets or want_buckets
-    if cfg.probe_confirm == "auto":
+    mode = cfg.probe_confirm if cfg.filtered else "inline"
+    if mode == "auto":
         pend = state.n_pending
         mode = (
             "inline"
@@ -710,8 +716,6 @@ def crawl_round(
             or state.n_seen <= _PROBE_SWITCH_FACTOR * max(pend, 1)
             else "join"
         )
-    else:
-        mode = cfg.probe_confirm
     # with TTL, rows seen at round <= rnd - ttl have aged out: they are
     # schedulable again, so the exact membership set excludes them (keys
     # re-seen later keep their newer row)
@@ -724,8 +728,15 @@ def crawl_round(
     keyed = canonicalize_candidates(
         state.candidates.observe(obs_cand, F.count(F.lit(1)).alias("n_raw"))
     )
+    # within-batch LWW dedup in the JVM, whichever confirm follows; n_cand
+    # rides as an Observation
+    obs_dedup = Observation(f"dedup_{rnd}")
+    cand = dedup_batch(keyed).observe(
+        obs_dedup, F.count(F.lit(1)).alias("n_cand")
+    )
 
-    if cfg.use_bloom:
+    standing = None
+    if cfg.filtered:
         standing = state.blooms
         if standing is not None and n_buckets != want_buckets:
             # bucket-count policy stepped up: the standing filter's layout
@@ -734,17 +745,18 @@ def crawl_round(
             # amortized O(log |url_seen|) times over a crawl's life)
             standing = None
             n_buckets = want_buckets
-        if standing is None and state.round_no > 0:
-            # bootstrap BEFORE the probe (a bucket-policy step-up above,
-            # or a cuckoo resume whose committed filter was AHEAD of
-            # round_marker): the invariant is filter ⊇ effective url_seen
-            # — probing an empty table here would mark every seen URL
-            # definitely-new and re-schedule it. With TTL the rebuild must reproduce the
-            # START-of-round filter content {first_seen_round > rnd-ttl-1},
-            # NOT eff_seen {> rnd-ttl}: this round's delete_keys targets the
-            # keys aging out AT rnd, and a cuckoo delete of an absent key
-            # can evict a colliding twin's fingerprint (false negative) —
-            # so those keys must be IN the rebuilt table (ADVICE r02).
+        if standing is None:
+            # bootstrap BEFORE the probe (a hand-built state, a bucket-
+            # policy step-up above, or a cuckoo resume whose committed
+            # filter was AHEAD of round_marker): the invariant is filter ⊇
+            # effective url_seen — probing an empty table here would mark
+            # every seen URL definitely-new and re-schedule it. With TTL
+            # the rebuild must reproduce the START-of-round filter content
+            # {first_seen_round > rnd-ttl-1}, NOT eff_seen {> rnd-ttl}:
+            # this round's delete_keys targets the keys aging out AT rnd,
+            # and a cuckoo delete of an absent key can evict a colliding
+            # twin's fingerprint (false negative) — so those keys must be
+            # IN the rebuilt table (ADVICE r02).
             boot_src = eff_seen
             if cfg.ttl_rounds is not None:
                 boot_src = state.url_seen.filter(
@@ -758,21 +770,9 @@ def crawl_round(
             standing = _materialize(
                 build(boot_src, n_buckets=n_buckets)
             )
-        filter_in = standing
-        if filter_in is None:  # round 1: nothing seen yet
-            schema = (
-                CUCKOO_SCHEMA
-                if cfg.filter_kind == "cuckoo"
-                else "bucket int, bloom binary, n_items long, m_bits long,"
-                " k int"
-            )
-            filter_in = keyed.sparkSession.createDataFrame([], schema)
-    probe_join = cfg.use_bloom and mode == "join"
-    if probe_join:
-        # "join": keyed candidates flow straight into the filter-probe
-        # cogroup, with the within-batch LWW dedup riding its shuffle
-        # (same canonical -> same url_hash -> same bucket). Filter
-        # negatives BYPASS the exact anti-join, so url_seen is only
+    if mode == "join":
+        # "join": deduped candidates flow into the filter-probe cogroup.
+        # Filter negatives BYPASS the exact anti-join, so url_seen is only
         # scanned by the (selective) confirm join of the positives — the
         # right choice once |url_seen| >> |round candidates|. Costs one
         # extra materializing job per round (the probe pin).
@@ -781,29 +781,24 @@ def crawl_round(
             if cfg.filter_kind == "cuckoo"
             else filter_not_seen
         )
-        unseen, flagged = probe(
-            keyed,
+        # the flagged frame goes unused here; returning it marks the
+        # call as the one that ran the probe (perfbench's trace reads it)
+        unseen, _flagged = probe(
+            cand,
             eff_seen,
-            filter_in,
+            standing,
             hash_col="url_hash",
             key_cols=["url_hash", "canonical_url"],
             n_buckets=n_buckets,
-            bucket_transform=_lww_dedup_pandas,
             return_flagged=True,
         )
-        n_cand = flagged.count()  # parquet-footer count: metadata only
     else:
-        # "inline" (and the filterless path): JVM window dedup, then one
-        # exact left-anti join against the effective url_seen. No Python
-        # boundary and no job of its own — the whole candidate path
-        # (canonicalize -> dedup -> anti-join -> robots -> politeness) is
-        # ONE materializing job per round (the sched write), n_cand rides
-        # as an Observation, and against a fresh crawl's empty seen frame
-        # Catalyst drops the join altogether.
-        obs_dedup = Observation(f"dedup_{rnd}")
-        cand = dedup_batch(keyed).observe(
-            obs_dedup, F.count(F.lit(1)).alias("n_cand")
-        )
+        # "inline": one exact left-anti join against the effective
+        # url_seen. No Python boundary and no job of its own — the whole
+        # candidate path (canonicalize -> dedup -> anti-join -> robots ->
+        # politeness) is ONE materializing job per round (the sched
+        # write), and against a fresh crawl's empty seen frame Catalyst
+        # drops the join altogether.
         unseen = filter_not_seen(
             cand,
             eff_seen,
@@ -831,8 +826,7 @@ def crawl_round(
     # observations resolve after the first action over the candidate plan
     # (the sched materialize above, or the probe pin in "join" mode)
     n_raw = int(obs_cand.get["n_raw"])
-    if not probe_join:  # "join" counted n_cand off the probe's footers
-        n_cand = int(obs_dedup.get["n_cand"])
+    n_cand = int(obs_dedup.get["n_cand"])
 
     # fetch + extract + expand in ONE pass over the corpus — plan built by
     # :func:`_fetch_extract_plan` (shared with the fused-resume rebuild)
@@ -844,7 +838,7 @@ def crawl_round(
         "sched": sched,
         "n_raw": n_raw,
         "n_cand": n_cand,
-        "mode": mode if cfg.use_bloom else "exact",
+        "mode": mode,
         "n_buckets": n_buckets,
     }
     round_metrics = None
@@ -869,14 +863,15 @@ def crawl_round(
             "url_hash", "canonical_url", F.lit(rnd).alias("first_seen_round")
         )
     )
-    # incremental bloom maintenance: build over ONLY this round's newly-seen
-    # hashes, OR into the standing table — O(delta), not O(|url_seen|)
-    new_blooms = state.blooms
-    if cfg.use_bloom:
+    # incremental filter maintenance, only where a round may probe it:
+    # build over ONLY this round's newly-seen hashes — O(delta), not
+    # O(|url_seen|)
+    new_blooms = None
+    if cfg.filtered:
         if cfg.filter_kind == "cuckoo":
             # delete keys that aged out THIS round, then insert the round's
             # newly-scheduled keys — both O(delta), per-bucket cogroups
-            upd = filter_in  # == standing, or the empty table in round 1
+            upd = standing
             if cfg.ttl_rounds is not None:
                 aged = state.url_seen.filter(
                     F.col("first_seen_round") == rnd - cfg.ttl_rounds
@@ -908,7 +903,7 @@ def crawl_round(
             delta = build_bloom_table(
                 sched.select("url_hash"), n_buckets=n_buckets
             )
-            # `filter_in` already covers url_seen (bootstrapped if needed).
+            # `standing` already covers url_seen (bootstrapped if needed).
             # The delta rides along LAZILY: the probe kernel ORs every
             # bloom row of a bucket, so a union of per-round deltas is
             # probe-equivalent to the merged table — no dedicated
@@ -919,10 +914,10 @@ def crawl_round(
             # re-build an ever-growing delta stack.
             if rnd % _BLOOM_COMPACT_EVERY == 0:
                 new_blooms = _materialize(
-                    merge_bloom_tables(filter_in, delta)
+                    merge_bloom_tables(standing, delta)
                 )
             else:
-                new_blooms = filter_in.unionByName(delta)
+                new_blooms = standing.unionByName(delta)
     metrics = state.metrics
     metrics_delta = None
     for piece in (prev_metrics, round_metrics):
@@ -945,7 +940,7 @@ def crawl_round(
     # only paid when an auto knob is on (the fixed-mode job count per
     # round is unchanged)
     n_seen_next, n_pending_next = state.n_seen, state.n_pending
-    if auto_scale:
+    if cfg.auto_scale:
         n_seen_next = state.n_seen + sched.count()
         if cfg.fused:
             # the deferred fetch must NOT run early (counting next_cand
@@ -973,7 +968,7 @@ def crawl_round(
         blooms=new_blooms,
         n_seen=n_seen_next,
         n_pending=n_pending_next,
-        filter_buckets=n_buckets if cfg.use_bloom else None,
+        filter_buckets=n_buckets if cfg.filtered else None,
         pending_fetch=pending,
         metrics_delta=metrics_delta,
     )
@@ -1140,14 +1135,23 @@ def run_crawl(
     empty_seen = spark.createDataFrame(
         [], "url_hash long, canonical_url string, first_seen_round int"
     ).where(F.lit(False))
+    # nothing seen yet, so a filtered crawl starts from an empty filter
+    # table instead of bootstrapping one from url_seen
+    blooms = None
+    if cfg.filtered:
+        blooms = spark.createDataFrame(
+            [],
+            CUCKOO_SCHEMA if cfg.filter_kind == "cuckoo" else BLOOM_SCHEMA,
+        )
     if catalog is not None:
         # 1-row control table: driver-side pyarrow write, no Spark job
         catalog.overwrite_local(
             "crawl_config", [(json.dumps(asdict(cfg)),)], "config string"
         )
     return _crawl_rounds(
-        CrawlState(url_seen=empty_seen, candidates=seeds), pages_c,
-        robots_ph, cfg, rounds, catalog, edges_all=None, prev_buckets=None,
+        CrawlState(url_seen=empty_seen, candidates=seeds, blooms=blooms),
+        pages_c, robots_ph, cfg, rounds, catalog, edges_all=None,
+        prev_buckets=None,
     )
 
 
@@ -1430,7 +1434,7 @@ def resume_crawl(
     blooms = None
     filter_buckets = None
     ftable = f"url_seen_{cfg.filter_kind}"
-    if catalog.exists(ftable):
+    if cfg.filtered and catalog.exists(ftable):
         ftab = catalog.read(ftable)
         head = ftab.select(
             F.max("committed_round").alias("r"),
@@ -1458,7 +1462,6 @@ def resume_crawl(
             if r["round"] == done
         ]
         fused_row = rows[0] if rows else None
-    auto_scale = cfg.bloom_buckets is None or cfg.probe_confirm == "auto"
     pending = None
     if fused_row is not None:
         sched_done = catalog.read("schedule").filter(F.col("round") == done)
@@ -1491,7 +1494,7 @@ def resume_crawl(
         # auto counts: same one-round-stale proxy the uninterrupted fused
         # run uses (committed in the marker), so resume makes identical
         # inline/join decisions
-        n_pending = int(fused_row["n_raw"]) if auto_scale else None
+        n_pending = int(fused_row["n_raw"]) if cfg.auto_scale else None
     else:
         candidates = (
             catalog.read("pending_candidates")
@@ -1503,7 +1506,7 @@ def resume_crawl(
             if catalog.exists("metrics")
             else None
         )
-        n_pending = candidates.count() if auto_scale else None
+        n_pending = candidates.count() if cfg.auto_scale else None
     state = CrawlState(
         url_seen=url_seen,
         candidates=candidates,
@@ -1511,7 +1514,7 @@ def resume_crawl(
         metrics=metrics,
         round_no=done,
         blooms=blooms,
-        n_seen=url_seen.count() if auto_scale else 0,
+        n_seen=url_seen.count() if cfg.auto_scale else 0,
         n_pending=n_pending,
         filter_buckets=filter_buckets,
         pending_fetch=pending,

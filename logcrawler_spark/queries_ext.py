@@ -1087,9 +1087,10 @@ def q_crawl_ttl_recrawl(spark, sf_dir):
             ),
         )
 
+    # "join" probes the cuckoo filter every round, so its TTL deletes run
     state = run_crawl(
         spark, pages, seeds, robots, rounds=rounds, budget=budget,
-        filter_kind="cuckoo", ttl_rounds=ttl,
+        filter_kind="cuckoo", ttl_rounds=ttl, probe_confirm="join",
     )
     return state.schedule.select(
         "round", "host", "canonical_url", "priority", "host_rank", "slot_ms"

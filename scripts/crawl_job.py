@@ -39,7 +39,8 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument(
         "--filter-kind", choices=["bloom", "cuckoo"], default="bloom",
-        help="URL-seen prefilter (cuckoo supports deletion -> TTL recrawl)",
+        help="URL-seen prefilter (cuckoo supports deletion -> TTL recrawl);"
+        " kept only with --probe-confirm join or auto",
     )
     ap.add_argument(
         "--ttl-rounds", type=int, default=None,
@@ -59,8 +60,8 @@ def main() -> None:
     ap.add_argument(
         "--probe-confirm", choices=["inline", "join", "auto"],
         default="inline",
-        help="URL-seen confirm shape; auto flips inline->join once the"
-        " seen set outgrows the candidate stream",
+        help="URL-seen confirm shape; inline keeps no filter, auto flips"
+        " inline->join once the seen set outgrows the candidate stream",
     )
     ap.add_argument(
         "--auto-buckets", action="store_true",

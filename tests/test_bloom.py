@@ -122,7 +122,8 @@ def test_merge_with_none_base_returns_delta(spark):
 
 def test_crawl_bloom_built_from_delta_only(spark):
     """The crawl loop must never rebuild the bloom from the full url_seen:
-    every per-round build input is exactly that round's scheduled batch."""
+    every per-round build input is exactly that round's scheduled batch.
+    A "join" crawl probes its filter every round, so it keeps one."""
     import logcrawler_spark.plans.frontier as fr
     from logcrawler_spark.plans.bloom import build_bloom_table as real_build
     from logcrawler_spark.sources.pages import (
@@ -148,6 +149,7 @@ def test_crawl_bloom_built_from_delta_only(spark):
             rounds=3,
             budget=5,
             use_bloom=True,
+            probe_confirm="join",
         )
     finally:
         fr.build_bloom_table = orig

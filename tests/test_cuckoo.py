@@ -8,8 +8,8 @@ from pyspark.sql import functions as F
 from logcrawler_spark.plans.cuckoo import (
     build_cuckoo_table,
     delete_keys,
+    filter_not_seen_cuckoo,
     insert_keys,
-    probe_maybe_seen,
 )
 
 N_BUCKETS = 16
@@ -22,12 +22,20 @@ def _keyed(spark, lo, hi):
     )
 
 
-def _probe_map(cand, cuckoos):
+def _flagged(cand, cuckoos, n_buckets=N_BUCKETS):
+    """The probe's flagged frame: ``cand`` plus its ``__maybe`` verdict."""
+    _unseen, flagged = filter_not_seen_cuckoo(
+        cand, cand.limit(0), cuckoos,
+        key_cols=["url_hash", "canonical_url"], n_buckets=n_buckets,
+        return_flagged=True,
+    )
+    return flagged
+
+
+def _probe_map(cand, cuckoos, n_buckets=N_BUCKETS):
     return {
         r["canonical_url"]: r["__maybe"]
-        for r in probe_maybe_seen(
-            cand, cuckoos, n_buckets=N_BUCKETS
-        ).collect()
+        for r in _flagged(cand, cuckoos, n_buckets).collect()
     }
 
 
@@ -107,11 +115,15 @@ def test_crawl_with_cuckoo_filter_matches_bloom_and_simulator(spark):
             for r in df.collect()
         )
 
+    # "join" probes each filter every round
     ck = run_crawl(
         spark, pages, seeds, robots, rounds=3, budget=5,
-        filter_kind="cuckoo",
+        filter_kind="cuckoo", probe_confirm="join",
     )
-    bl = run_crawl(spark, pages, seeds, robots, rounds=3, budget=5)
+    bl = run_crawl(
+        spark, pages, seeds, robots, rounds=3, budget=5,
+        probe_confirm="join",
+    )
     assert key(ck.schedule) == key(bl.schedule)
     sim = simulate_crawl(
         pages.toPandas(), seeds.toPandas(), robots.toPandas(), 3, 5
@@ -138,9 +150,10 @@ def test_ttl_recrawl_matches_simulator_and_reschedules(spark):
     robots = generate_robots_rules(spark, n_hosts=50)
     rounds, budget, ttl = 5, 5, 2
 
+    # "join" probes the filter every round, so its TTL deletes are live
     st = run_crawl(
         spark, pages, seeds, robots, rounds=rounds, budget=budget,
-        filter_kind="cuckoo", ttl_rounds=ttl,
+        filter_kind="cuckoo", ttl_rounds=ttl, probe_confirm="join",
     )
     got = sorted(
         (r["round"], r["host"], r["priority"], r["canonical_url"],
@@ -200,10 +213,7 @@ def test_stash_overflow_degrades_gracefully_then_grows(spark):
     assert sum(len(r["stash"] or b"") for r in rows) > 0, (
         "expected stash overflow at 122% load"
     )
-    got = {
-        r["canonical_url"]: r["__maybe"]
-        for r in probe_maybe_seen(seen, tiny, n_buckets=1).collect()
-    }
+    got = _probe_map(seen, tiny, n_buckets=1)
     assert all(got.values()), "stash overflow produced a false negative"
 
     grown = grow_overfull_buckets(
@@ -212,10 +222,7 @@ def test_stash_overflow_degrades_gracefully_then_grows(spark):
     grows = grown.collect()
     assert all(len(r["stash"] or b"") == 0 for r in grows)
     assert all(r["m_rows"] > (1 << 10) for r in grows)
-    got2 = {
-        r["canonical_url"]: r["__maybe"]
-        for r in probe_maybe_seen(seen, grown, n_buckets=1).collect()
-    }
+    got2 = _probe_map(seen, grown, n_buckets=1)
     assert all(got2.values())
     # untouched healthy buckets pass through unchanged
     healthy = build_cuckoo_table(seen, n_buckets=N_BUCKETS)
@@ -231,7 +238,7 @@ def test_probe_does_not_mutate_candidate_schema(spark):
     cand = _keyed(spark, 50, 150)
     before = list(cand.columns)
     cuckoos = build_cuckoo_table(seen, n_buckets=N_BUCKETS)
-    probe_maybe_seen(cand, cuckoos, n_buckets=N_BUCKETS).collect()
+    _flagged(cand, cuckoos).collect()
     assert list(cand.columns) == before
     assert "__maybe" not in [f.name for f in cand.schema.fields]
 
@@ -259,10 +266,7 @@ def test_stash_growth_at_low_load_doubles(spark):
         f"stash-only rebuild stayed at m_rows={rows[0]['m_rows']}"
     )
     assert len(rows[0]["stash"] or b"") == 0
-    got = {
-        r["canonical_url"]: r["__maybe"]
-        for r in probe_maybe_seen(seen, grown, n_buckets=1).collect()
-    }
+    got = _probe_map(seen, grown, n_buckets=1)
     assert all(got.values())
 
 
@@ -273,3 +277,31 @@ def test_build_min_m_rows_by_bucket_floor(spark):
         seen, n_buckets=1, min_m_rows_by_bucket={0: 1 << 12}
     )
     assert t.collect()[0]["m_rows"] == 1 << 12
+
+
+def test_evictions_raise_no_overflow_and_keep_their_sequence():
+    """The eviction loop's slot LCG wraps at 64 bits without numpy
+    overflow warnings (run here as errors), and places fingerprints
+    exactly as the numpy-uint64 formulation did: 260 keys into 256 slots
+    force thousands of kicks and a stash."""
+    import hashlib
+    import warnings
+
+    import numpy as np
+
+    from logcrawler_spark.plans.cuckoo import SLOTS_PER_ROW, _insert_many
+
+    hashes = np.arange(1, 261, dtype=np.uint64) * np.uint64(
+        0x9E3779B97F4A7C15
+    )
+    table = np.zeros((1 << 6, SLOTS_PER_ROW), dtype=np.uint16)
+    with warnings.catch_warnings(), np.errstate(all="raise"):
+        warnings.simplefilter("error")
+        kicks, homeless = _insert_many(table, hashes)
+    assert kicks == 2959 and len(homeless) == 5
+    digest = hashlib.sha256(
+        table.tobytes() + np.asarray(homeless, dtype=np.uint16).tobytes()
+    ).hexdigest()
+    assert digest == (
+        "6aa50e626162959883dc588b55b74e251cfadb06a82251f34fecc7631ad162b8"
+    )

@@ -378,10 +378,15 @@ def test_probe_confirm_join_matches_inline(spark):
     assert run("inline") == run("join")
 
 
-def test_warm_round0_state_never_reschedules_seen_keys(spark):
+@pytest.mark.parametrize("filter_kind", ["bloom", "cuckoo"])
+@pytest.mark.parametrize("probe_confirm", ["inline", "join"])
+def test_warm_round0_state_never_reschedules_seen_keys(
+    spark, probe_confirm, filter_kind
+):
     """A round-0 CrawlState whose url_seen already holds some seed keys
     must not schedule those keys: round 1 confirms against url_seen like
-    every later round."""
+    every later round. A "join" round given no filter bootstraps one from
+    url_seen instead of probing an empty table."""
     from logcrawler_spark.functions.urls import canonicalize_url
     from logcrawler_spark.plans.frontier import (
         CrawlState,
@@ -402,7 +407,7 @@ def test_warm_round0_state_never_reschedules_seen_keys(spark):
     def scheduled(seen):
         st = crawl_round(
             CrawlState(url_seen=seen, candidates=seeds), pages_c, robots,
-            BUDGET, probe_confirm="inline",
+            BUDGET, probe_confirm=probe_confirm, filter_kind=filter_kind,
         )
         return st.schedule.select("url_hash", "canonical_url").collect()
 

@@ -170,6 +170,127 @@ def test_inline_confirm_round_plan_has_no_python_probe(spark, monkeypatch):
         assert node not in plan, node
 
 
+def _skeleton(df) -> list[str]:
+    """Operator names of the optimized plan, top-down (no ids or paths)."""
+    import re
+
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [
+        m.group(1)
+        for m in (re.match(r"[\s:+\-|!]*(\w+)", ln) for ln in plan.splitlines())
+        if m
+    ]
+
+
+def test_inline_crawl_keeps_no_filter(spark, tmp_path, monkeypatch):
+    """An inline crawl builds, commits and reads no URL-seen filter, and
+    no round plan crosses into a grouped pandas kernel. ``use_bloom=False``
+    is the same crawl: the same round plans and the same "inline" label."""
+    import logcrawler_spark.utils as U
+    from logcrawler_spark.catalog import Catalog
+    from logcrawler_spark.plans.frontier import resume_crawl, run_crawl
+    from logcrawler_spark.sources.pages import (
+        generate_pages,
+        generate_robots_rules,
+        generate_seeds,
+    )
+
+    plans, scheds, reads = [], [], []
+    orig_mat = U.materialize
+
+    def spy_mat(df):
+        plans.append(_plan(df))
+        if "slot_ms" in df.columns:
+            scheds.append(df)
+        return orig_mat(df)
+
+    def spy_write(method):
+        orig = getattr(Catalog, method)
+
+        def inner(self, table, df, *a, **kw):
+            plans.append(_plan(df))
+            return orig(self, table, df, *a, **kw)
+
+        return inner
+
+    orig_read = Catalog.read
+
+    def spy_read(self, table):
+        reads.append(table)
+        return orig_read(self, table)
+
+    monkeypatch.setattr(U, "materialize", spy_mat)
+    for method in ("append", "overwrite"):
+        monkeypatch.setattr(Catalog, method, spy_write(method))
+    monkeypatch.setattr(Catalog, "read", spy_read)
+    pages = generate_pages(spark, SF_SMOKE, 50)
+    seeds = generate_seeds(spark, SF_SMOKE, 50)
+    robots = generate_robots_rules(spark, 50)
+    skeletons = []
+    for knobs in (dict(probe_confirm="inline"), dict(use_bloom=False)):
+        plans.clear()
+        scheds.clear()
+        reads.clear()
+        knobs = dict(budget=4, **knobs)
+        cat = Catalog(spark, str(tmp_path / str(len(skeletons))))
+        st = run_crawl(
+            spark, pages, seeds, robots, rounds=2, catalog=cat, **knobs
+        )
+        assert st.blooms is None and st.filter_buckets is None
+        skeletons.append([_skeleton(df) for df in scheds])
+        resumed = resume_crawl(
+            spark, pages, robots, cat, total_rounds=3, **knobs
+        )
+        assert resumed.blooms is None
+        modes = {
+            r["probe_mode"]
+            for r in resumed.metrics.select("probe_mode").distinct().collect()
+        }
+        assert modes == {"inline"}
+        for kind in ("bloom", "cuckoo"):
+            assert not cat.exists(f"url_seen_{kind}")
+            assert f"url_seen_{kind}" not in reads
+        assert len(plans) > 6
+        for plan in plans:
+            for node in ("FlatMapGroupsInPandas", "FlatMapCoGroupsInPandas"):
+                assert node not in plan, node
+    assert len(skeletons[0]) == 2
+    assert skeletons[0] == skeletons[1]
+
+
+def test_join_round_dedups_in_jvm_below_probe(spark, monkeypatch):
+    """A "join" round dedups its candidates with the JVM window before
+    the cogrouped filter probe, so the pandas kernel only probes."""
+    import logcrawler_spark.utils as U
+    from logcrawler_spark.plans.frontier import run_crawl
+    from logcrawler_spark.sources.pages import (
+        generate_pages,
+        generate_robots_rules,
+        generate_seeds,
+    )
+
+    probes = []
+    orig = U.materialize
+
+    def spy(df):
+        if "__maybe" in df.columns:
+            probes.append(df._jdf.queryExecution().executedPlan().toString())
+        return orig(df)
+
+    monkeypatch.setattr(U, "materialize", spy)
+    run_crawl(
+        spark,
+        generate_pages(spark, SF_SMOKE, 50),
+        generate_seeds(spark, SF_SMOKE, 50),
+        generate_robots_rules(spark, 50),
+        rounds=2, budget=4, probe_confirm="join",
+    )
+    assert len(probes) == 2
+    for plan in probes:
+        top = plan.index("FlatMapCoGroupsInPandas")
+        assert "Window" in plan[top:], plan
+
+
 def test_fetch_retry_stays_in_codegen(spark):
     """The S6 retry expressions are pure columns — the fetch filter must
     not introduce a Python UDF stage."""

@@ -240,15 +240,14 @@ def test_resume_cuckoo_ttl_rejects_ahead_filter_and_rebuilds(spark, tmp_path):
     robots = generate_robots_rules(spark, n_hosts=N_HOSTS)
     rounds, ttl = 5, 2
 
-    full = run_crawl(
-        spark, pages, seeds, robots, rounds=rounds, budget=BUDGET,
-        filter_kind="cuckoo", ttl_rounds=ttl,
+    # "join" probes the filter every round, so a bad rebuild would show
+    knobs = dict(
+        budget=BUDGET, filter_kind="cuckoo", ttl_rounds=ttl,
+        probe_confirm="join",
     )
+    full = run_crawl(spark, pages, seeds, robots, rounds=rounds, **knobs)
     cat = Catalog(spark, str(tmp_path))
-    run_crawl(
-        spark, pages, seeds, robots, rounds=3, budget=BUDGET,
-        filter_kind="cuckoo", ttl_rounds=ttl, catalog=cat,
-    )
+    run_crawl(spark, pages, seeds, robots, rounds=3, catalog=cat, **knobs)
     # simulate the crashed round-4 attempt: an (empty = worst-case) filter
     # tagged round 4 is committed, but round_marker still says 3
     cat.overwrite(
@@ -258,8 +257,7 @@ def test_resume_cuckoo_ttl_rejects_ahead_filter_and_rebuilds(spark, tmp_path):
         ),
     )
     resumed = resume_crawl(
-        spark, pages, robots, cat, total_rounds=rounds, budget=BUDGET,
-        filter_kind="cuckoo", ttl_rounds=ttl,
+        spark, pages, robots, cat, total_rounds=rounds, **knobs
     )
 
     def sched_key(df):
